@@ -7,7 +7,7 @@ All pure DataFrame programs (no UDFs). Scale design:
 - MinHash-LSH shuffles on *band keys* (int64 folds of the band's
   signature values — 8-byte shuffle/join keys). Candidate
   generation is a self-equi-join per band; only candidates are verified
-  with exact Jaccard (explode + join on shingle), so the quadratic step
+  with exact Jaccard (shingle-array intersection), so the quadratic step
   never touches non-colliding documents. At 100 TB you add more bands /
   rows-per-band to tune recall vs join fan-out; the plan shape is
   unchanged.
@@ -330,11 +330,11 @@ def lsh_candidate_pairs(
 
 
 def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Distinct (id, shingle) rows, persisted: this table feeds several
-    consumers in every Jaccard pipeline (join sides, size table,
-    inverted index); persisting makes the explode+distinct shuffle run
-    once — at scale the difference between one and N passes over the
-    corpus (MEMORY_AND_DISK: spills, never recomputes)."""
+    """Distinct (id, shingle) rows, persisted: the inverted-index
+    pipelines (``ngram_jaccard_pairs``, the corpus funnel) read it
+    several times; persisting makes the explode run once — at scale the
+    difference between one and N passes over the corpus
+    (MEMORY_AND_DISK: spills, never recomputes)."""
     from pyspark import StorageLevel
 
     # distinct-within-document (array_distinct before the explode) IS
@@ -356,39 +356,43 @@ def jaccard_verify(
     pairs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    sh: DataFrame = None,
+    df_b: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Exact Jaccard over distinct shingle sets for the candidate pairs
-    (verification step of the LSH pipeline). Pass a precomputed
-    ``shingle_table`` when the caller already built one."""
-    if sh is None:
-        sh = shingle_table(df, text_col, id_col)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    # common shingles per pair: join the pair list to both sides' shingles
-    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    common = (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
+    (verification step of the LSH pipeline). A pair with no common
+    shingle stays (``n_common = 0``); a pair touching a document with
+    no shingles (< k words) is dropped. ``df_b`` holds the ``id_b``
+    end's documents when the two ends come from different frames (the
+    incremental probe's batch and index); by default both ends read
+    ``df``.
+
+    Shape: one distinct-shingle array per document, joined to the pair
+    list once per pair end; counts are array sizes — no explode, persist
+    or aggregation."""
+
+    def arrays(docs: DataFrame, end: str) -> DataFrame:
+        return docs.select(
+            F.col(id_col).alias(f"id_{end}"),
+            F.array_distinct(shingles_of(F.col(text_col))).alias(f"s{end}"),
+        )
+
+    n_a, n_b = F.size("sa").cast("long"), F.size("sb").cast("long")
+    n_common = F.size(F.array_intersect("sa", "sb")).cast("long")
     return (
-        pairs.join(common, ["id_a", "id_b"], "left")
-        .join(na, "id_a")
-        .join(nb, "id_b")
+        pairs.join(arrays(df, "a"), "id_a")
+        .join(arrays(df if df_b is None else df_b, "b"), "id_b")
+        # one predicate over both ends drops pairs touching a shingle-less
+        # doc and stays a join condition; a per-document filter would be
+        # pushed below the shingle projection (shingling every row twice)
+        # and, as a constraint on the text, inferred onto the pair ids
+        .filter(F.least(n_a, n_b) > 0)
         .select(
-            "id_a",
-            "id_b",
-            F.coalesce(F.col("n_common"), F.lit(0)).alias("n_common"),
-            "n_a",
-            "n_b",
-            (
-                F.coalesce(F.col("n_common"), F.lit(0)).cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.coalesce(F.col("n_common"), F.lit(0)))
-            ).alias("jaccard"),
+            "id_a", "id_b", n_common.alias("n_common"), n_a.alias("n_a"), n_b.alias("n_b")
+        )
+        .withColumn(
+            "jaccard",
+            F.col("n_common").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
         )
     )
 
@@ -627,13 +631,12 @@ def incremental_neardup_verdicts(
     broadcasts only the batch bands; Jaccard verification touches only
     candidate pairs. Nothing in the plan grows with index × batch.
 
-    The verify step unions both tables into ONE shingle table, which is
-    only sound when batch and index ids are disjoint — a replayed id
-    with changed text would silently merge two documents' shingles
-    under one id and corrupt every Jaccard touching it. That contract
-    is therefore enforced (``check_disjoint_ids``): one broadcast
-    id-semi-join against the index, limit-1, raising on the first
-    collision. Disable it only when the caller has already proven
+    Batch and index ids must be disjoint: a replayed id with changed
+    text would be judged against its own earlier version and, when
+    novel, accepted as a second document under a taken id. That
+    contract is therefore enforced (``check_disjoint_ids``): one
+    broadcast id-semi-join against the index, limit-1, raising on the
+    first collision. Disable it only when the caller has already proven
     disjointness (e.g. right after an exact-id anti-join).
     """
     if check_disjoint_ids:
@@ -650,8 +653,8 @@ def incremental_neardup_verdicts(
             raise ValueError(
                 "incremental_neardup_verdicts: document id "
                 f"{collision[0][0]!r} appears in BOTH the batch and the "
-                "index; the shingle union would merge two documents "
-                "under one id and corrupt Jaccard verdicts. Drop or "
+                "index; a changed text under a taken id would be "
+                "accepted as a second document with that id. Drop or "
                 "re-key replayed ids before probing (the streaming "
                 "ingest sink's exact-hash anti-join does not cover "
                 "same-id different-text replays)."
@@ -664,12 +667,7 @@ def incremental_neardup_verdicts(
     ).select(
         F.col("id_batch").alias("id_a"), F.col("id_index").alias("id_b")
     )
-    # ids of the two tables are disjoint by contract, so one shingle
-    # table serves both verify sides
-    both = batch_docs.select(id_col, text_col).unionByName(
-        index_docs.select(id_col, text_col)
-    )
-    verified = jaccard_verify(both, pairs, text_col, id_col)
+    verified = jaccard_verify(batch_docs, pairs, text_col, id_col, index_docs)
     return _novelty_verdicts(
         batch_docs.select(F.col(id_col)), verified, id_col, min_jaccard
     )
@@ -739,8 +737,7 @@ def incremental_neardup_verdicts_indexed(
 
     The candidate-pair table feeds multiple consumers (the index-side
     candidate-id projection and the verify join), so it is persisted;
-    callers in long-lived sessions release it via ``scoped_caches``
-    (the ``shingle_table`` discipline).
+    callers in long-lived sessions release it via ``scoped_caches``.
     """
     from pyspark import StorageLevel
 
@@ -789,8 +786,7 @@ def incremental_neardup_verdicts_indexed(
         if broadcast_batch:
             cand_b = F.broadcast(cand_b)
         index_text = index_art.join(cand_b, id_col).select(id_col, text_col)
-    both = batch_art.select(id_col, text_col).unionByName(index_text)
-    verified = jaccard_verify(both, pairs, text_col, id_col)
+    verified = jaccard_verify(batch_art, pairs, text_col, id_col, index_text)
     return _novelty_verdicts(
         batch_art.select(F.col(id_col)), verified, id_col, min_jaccard
     )
@@ -956,6 +952,10 @@ def lsh_band_profile(
     operator in this module carries; the multiplicity column still
     counts the capped buckets, so a hot-bucket config is visible
     rather than silently truncated.
+
+    Configs with ``band_size > 2`` band on a lossy 62-bit key
+    (``_band_key`` folds to 31 bits between steps), so their bucket and
+    candidate counts can include fold collisions (odds ~2^-62).
 
     Shape: signatures computed once and persisted (they feed every
     config); per config one bucket-width aggregation plus one

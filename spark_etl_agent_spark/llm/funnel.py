@@ -134,13 +134,12 @@ def corpus_build_funnel(
     # multiset, so the pair set is unchanged).
     sh2 = shingle_table(s2, text_col, id_col)
     pairs = lsh_candidate_pairs(minhash_from_shingle_table(sh2, id_col))
-    # Lean drop-set verify (vs the reporting ``jaccard_verify``): a pair
+    # Drop-set verify over the persisted shingle table this stage
+    # already holds (``jaccard_verify`` would re-shingle s2): a pair
     # with zero common shingles has jaccard 0 and can never reach the
-    # threshold, so the pairs-preserving LEFT join that the reporting
-    # API owes its callers is dead weight here — the inner common-count
-    # flow alone decides the drops. The trailing ``.distinct()`` is
-    # dropped too: a left_anti join is set semantics already, duplicate
-    # drop ids cost nothing.
+    # threshold, so the inner common-count flow alone decides the
+    # drops. The trailing ``.distinct()`` is dropped too: a left_anti
+    # join is set semantics already, duplicate drop ids cost nothing.
     sizes = sh2.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     common = (
         pairs.join(sh2.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")

@@ -336,24 +336,21 @@ def streaming_dedup_ingest_sink(
             # exact-hash probe FIRST: the LSH probe cannot see documents
             # too short to shingle (< k words — all-NULL signatures), so
             # without this anti-join a short doc would be re-accepted
-            # verbatim every batch. One aggregated index projection,
-            # same single index scan the LSH probe already pays.
-            index_hashes = index_df.select(
-                F.md5(F.col("text")).alias("__ih")
-            ).distinct()
+            # verbatim every batch. One index projection (no distinct:
+            # an anti join is set semantics already), same single index
+            # scan the LSH probe already pays.
             keeper = keeper.join(
-                index_hashes,
+                index_df.select(F.md5(F.col("text")).alias("__ih")),
                 F.md5(F.col("text")) == F.col("__ih"),
                 "left_anti",
             )
             # id probe SECOND: an at-least-once replay can re-deliver an
             # already-ingested id with CHANGED text, which the hash
             # anti-join passes; it is not novel (the id is taken) and it
-            # must not reach the LSH probe, whose shingle union requires
-            # batch/index ids to be disjoint. Same single index scan,
+            # must not reach the LSH probe, whose verdicts assume
+            # batch/index ids are disjoint. Same single index scan,
             # one id-column projection.
-            index_ids = index_df.select("doc_id").distinct()
-            keeper = keeper.join(index_ids, "doc_id", "left_anti")
+            keeper = keeper.join(index_df.select("doc_id"), "doc_id", "left_anti")
             verdicts = incremental_neardup_verdicts(
                 index_df,
                 keeper,
@@ -368,8 +365,8 @@ def streaming_dedup_ingest_sink(
         novel = novel.localCheckpoint()  # verdict computed once
         n_novel = novel.count()
         novel_writer(novel, batch_id)
-        # the probe's shingle/fingerprint persists (and this batch's
-        # localCheckpoints) are batch-scoped; the scoped_caches wrapper
+        # this batch's localCheckpoints (and any persist inside the
+        # probe) are batch-scoped; the scoped_caches wrapper
         # in ingest_batch releases exactly those — NOT a session-global
         # clearCache, which would evict caches owned by unrelated
         # concurrent jobs and misses RDD-level checkpoint storage
@@ -464,19 +461,15 @@ def streaming_dedup_ingest_sink_indexed(
         else:
             # exact-hash probe against the STORED hash column (the
             # unindexed sink recomputes md5 over the index text here)
-            index_hashes = index_df.select(
-                F.col("content_hash").alias("__ih")
-            ).distinct()
             keeper = keeper.join(
-                index_hashes,
+                index_df.select(F.col("content_hash").alias("__ih")),
                 F.col("content_hash") == F.col("__ih"),
                 "left_anti",
             )
             # id probe second (replayed id with changed text is not
             # novel and must not reach the LSH probe — see the
             # unindexed sink)
-            index_ids = index_df.select("doc_id").distinct()
-            keeper = keeper.join(index_ids, "doc_id", "left_anti")
+            keeper = keeper.join(index_df.select("doc_id"), "doc_id", "left_anti")
             verdicts = incremental_neardup_verdicts_indexed(
                 index_df, keeper, min_jaccard=min_jaccard
             ).select("doc_id", "is_novel")

@@ -825,6 +825,82 @@ def test_jaccard_verify_bounds_on_real_corpus(spark, sf_dir):
         assert r.n_common <= min(r.n_a, r.n_b), r
 
 
+def test_jaccard_verify_matches_distinct_set_reference(spark):
+    """Edge cases against a pure-Python distinct-shingle-set reference:
+    a pair with no common shingle stays (n_common 0, jaccard 0.0), a
+    pair touching a < 3-word document or an id absent from the frame is
+    dropped, a shingle repeated within a document counts once, and the
+    counts are bigint with a double jaccard."""
+    from spark_etl_agent_spark.llm.dedup import jaccard_verify
+
+    texts = {
+        1: "a b c d e f",
+        2: "a b c d e g",
+        3: "x y",
+        4: "p q r p q r p q r",
+        5: "a b c a b c z",
+    }
+    pair_list = [(1, 2), (1, 3), (3, 4), (1, 4), (1, 5), (4, 5), (2, 99)]
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    pairs = spark.createDataFrame(pair_list, "id_a long, id_b long")
+    out = jaccard_verify(docs, pairs)
+
+    def shingles(t):
+        w = t.lower().split()
+        return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+
+    sets = {i: shingles(t) for i, t in texts.items()}
+    want = set()
+    for a, b in pair_list:
+        if sets.get(a) and sets.get(b):
+            c = len(sets[a] & sets[b])
+            na, nb = len(sets[a]), len(sets[b])
+            want.add((a, b, c, na, nb, c / (na + nb - c)))
+    got = {tuple(r) for r in out.collect()}
+    assert got == want
+    assert (1, 4, 0, 4, 3, 0.0) in got  # zero-overlap candidate kept
+    assert not any(3 in (r[0], r[1]) for r in got)  # 2-word doc dropped
+    assert out.dtypes == [
+        ("id_a", "bigint"),
+        ("id_b", "bigint"),
+        ("n_common", "bigint"),
+        ("n_a", "bigint"),
+        ("n_b", "bigint"),
+        ("jaccard", "double"),
+    ]
+
+
+def test_jaccard_verify_adds_no_explode_or_persist(spark, sf_dir):
+    """The verify works on one shingle array per document: its optimized
+    plan holds no Generate beyond those of its candidate-pair input, and
+    running it leaves no persisted RDD behind (an exploded, persisted
+    shingle table must not come back)."""
+    import re
+
+    from spark_etl_agent_spark.core.cache import _persistent_rdd_ids
+    from spark_etl_agent_spark.llm.dedup import (
+        jaccard_verify,
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+
+    def n_generate(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return len(re.findall(r"(?m)^[\s:|+-]*Generate\b", plan))
+
+    # a local copy of the corpus: a plan no other test has cached, so a
+    # persist inside the verify cannot hide behind an earlier one
+    real = load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = spark.createDataFrame(real.collect(), real.schema)
+    pairs = lsh_candidate_pairs(minhash_signatures(docs))
+    before = _persistent_rdd_ids(spark)
+    verified = jaccard_verify(docs, pairs)
+    assert verified.collect()
+    assert _persistent_rdd_ids(spark) == before
+    assert n_generate(pairs) > 0  # the pattern does see Generate nodes
+    assert n_generate(verified) == n_generate(pairs)
+
+
 def test_rollup_cascade_levels_consistent_and_single_fact_scan(spark, sf_dir):
     """Each level must equal a direct aggregation of the raw facts at
     that granularity, and coarser levels' plans must re-aggregate the

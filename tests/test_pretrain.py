@@ -276,9 +276,9 @@ def test_incremental_probe_best_match_tie_breaks_on_min_id(spark):
 
 
 def test_incremental_probe_raises_on_id_collision(spark):
-    """The shingle union inside the verdict is only sound for disjoint
-    batch/index ids; a replayed id with changed text must fail loudly
-    instead of silently merging two documents' shingles."""
+    """Batch and index ids must be disjoint; a replayed id with changed
+    text must fail loudly instead of being accepted as a second
+    document under a taken id."""
     from spark_etl_agent_spark.llm.dedup import incremental_neardup_verdicts
 
     base = "one two three four five six seven eight nine ten"
@@ -289,7 +289,7 @@ def test_incremental_probe_raises_on_id_collision(spark):
     )
     with pytest.raises(ValueError, match="BOTH the batch and the index"):
         incremental_neardup_verdicts(index, batch)
-    # a caller that has proven disjointness (or accepts the merge) can
+    # a caller that has proven disjointness (or accepts a re-used id) can
     # skip the guard and still get a row per batch doc
     out = incremental_neardup_verdicts(
         index, batch, check_disjoint_ids=False

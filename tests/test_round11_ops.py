@@ -51,7 +51,7 @@ def _text_scan_rows(verdicts_df):
     """Execute the verdict frame and return numOutputRows of the
     index-side TEXT fetch scan (output carries ``text`` but no
     signature column). The verdict pipeline persists intermediates, so
-    the file scan lives inside cache-materialization subplans — the
+    the file scan can live inside cache-materialization subplans — the
     walk descends through AQE wrappers, query stages, and
     InMemoryTableScan relations, de-duplicating shared scans by plan
     node id."""
@@ -120,9 +120,8 @@ def test_band_probe_candidate_text_fetch_skips_files(
     verdicts = D.incremental_neardup_verdicts_indexed(
         index_art, batch_art, min_jaccard=0.6
     )
-    # metric run FIRST: the verdict pipeline persists its internal
-    # shingle table, so a second execution reads InMemoryTableScan and
-    # the text file scan would vanish from the plan
+    # metric run FIRST: the scan-row metric is read from the plan's
+    # first execution
     scanned = _text_scan_rows(verdicts)
     rows = {r["doc_id"]: r["is_novel"] for r in verdicts.collect()}
     assert rows == {n: False, n + 1: False, n + 2: False}

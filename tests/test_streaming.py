@@ -551,8 +551,8 @@ def test_ingest_sink_drops_replayed_id_and_spares_foreign_caches(
 ):
     """Two contracts of the ingest sink in one stream run: (1) an
     at-least-once replay that re-delivers an already-ingested id with
-    CHANGED text is dropped (the id is taken — it must not corrupt the
-    LSH probe's shingle union, nor be re-accepted); (2) the sink's
+    CHANGED text is dropped (the id is taken — it must not be
+    re-accepted); (2) the sink's
     per-batch cache cleanup releases only its own persists/checkpoints,
     not caches owned by unrelated concurrent work in the session."""
     import os
