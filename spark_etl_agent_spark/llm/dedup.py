@@ -164,14 +164,15 @@ def normalized_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str =
 
 
 def shingles_of(text: Column, k: int = SHINGLE_K) -> Column:
-    """Word k-gram shingles as an array<string> (empty when < k words)."""
+    """Word k-gram shingles as an array<string> (empty when < k words).
+    k offset ``slice``s of the word array are zipped, so the lambda reads
+    struct fields only: indexing the word array inside it re-splits the
+    text per shingle (lambdas get no subexpression elimination)."""
     words = words_of(text)
     n = F.size(words)
-    idx = F.sequence(F.lit(1), n - (k - 1))  # 1-based start positions
-    gram = lambda i: F.concat_ws(
-        " ", *[F.element_at(words, i + off) for off in range(k)]
-    )
-    return F.when(n >= k, F.transform(idx, gram)).otherwise(
+    parts = [F.slice(words, 1 + off, n - (k - 1)) for off in range(k)]
+    gram = lambda z: F.concat_ws(" ", *[z[str(off)] for off in range(k)])
+    return F.when(n >= k, F.transform(F.arrays_zip(*parts), gram)).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -368,7 +369,8 @@ def jaccard_verify(
 
     Shape: one distinct-shingle array per document, joined to the pair
     list once per pair end; counts are array sizes — no explode, persist
-    or aggregation."""
+    or aggregation. When both ends read ``df``, each of its documents is
+    shingled once per end, candidate or not (linear in its length)."""
 
     def arrays(docs: DataFrame, end: str) -> DataFrame:
         return docs.select(

@@ -336,9 +336,8 @@ def streaming_dedup_ingest_sink(
             # exact-hash probe FIRST: the LSH probe cannot see documents
             # too short to shingle (< k words — all-NULL signatures), so
             # without this anti-join a short doc would be re-accepted
-            # verbatim every batch. One index projection (no distinct:
-            # an anti join is set semantics already), same single index
-            # scan the LSH probe already pays.
+            # verbatim every batch. One index projection, same single
+            # index scan the LSH probe already pays.
             keeper = keeper.join(
                 index_df.select(F.md5(F.col("text")).alias("__ih")),
                 F.md5(F.col("text")) == F.col("__ih"),

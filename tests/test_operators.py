@@ -870,6 +870,34 @@ def test_jaccard_verify_matches_distinct_set_reference(spark):
     ]
 
 
+def test_shingles_of_matches_python_reference(spark):
+    """Word k-grams in order against a pure-Python reference of
+    ``split(lower(text), '\\s+')``: a leading or trailing blank yields
+    an empty word, and a text with fewer than k words (or NULL) gives an
+    empty array."""
+    import re
+
+    from spark_etl_agent_spark.llm.dedup import shingles_of
+
+    texts = [None, "", " ", "a", "a b", "a b c", "  A  b c", "x\ty\nz w",
+             "a b c ", "a a a a a", " ".join(f"w{i}" for i in range(40))]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+
+    def reference(t, k):
+        if t is None:
+            return []
+        w = re.split(r"\s+", t.lower())
+        return [" ".join(w[i : i + k]) for i in range(len(w) - k + 1)]
+
+    for k in (1, 3, 5):
+        got = dict(docs.select("doc_id", shingles_of(F.col("text"), k)).collect())
+        assert got == {i: reference(t, k) for i, t in enumerate(texts)}, k
+    # the lambda reads struct fields only: one that indexes the word
+    # array re-splits the text per shingle (quadratic in its length)
+    body = str(shingles_of(F.col("text"))).split("->", 1)[1]
+    assert "split(" not in body.split(" ELSE ")[0]
+
+
 def test_jaccard_verify_adds_no_explode_or_persist(spark, sf_dir):
     """The verify works on one shingle array per document: its optimized
     plan holds no Generate beyond those of its candidate-pair input, and
