@@ -39,6 +39,7 @@ from typing import Any, Dict, Optional
 
 from pyspark.sql import functions as F
 
+from ..core.cache import scoped_caches
 from ..llm.decontam import ngram_contamination
 from ..llm.packing import pack_chunks
 from ..llm.sampling import mixture_plan, resample_epochs
@@ -82,145 +83,148 @@ class CorpusPrepService:
         if not load_date:
             load_date = datetime.now().strftime("%Y-%m-%d")
 
-        docs = self.catalog.read_table(self.source_table)
-        docs, in_obs = with_metrics(docs, n_input=F.count(F.lit(1)))
+        # every persist of the run (the decontaminated corpus, the
+        # ranked and packed frames) is released when the run ends,
+        # on the failure paths too
+        with scoped_caches(self.catalog.spark):
+            docs = self.catalog.read_table(self.source_table)
+            docs, in_obs = with_metrics(docs, n_input=F.count(F.lit(1)))
 
-        # 1. decontamination: keep docs below the overlap threshold.
-        # Docs too short to produce n-grams have no contamination row —
-        # kept (nothing to match is the conservative KEEP direction
-        # here, opposite of dedup's novelty default, because dropping
-        # unprovably-contaminated data loses corpus for no evidence.)
-        bench = self.catalog.read_table(self.benchmark_table)
-        contaminated = (
-            ngram_contamination(docs, bench)
-            .filter(F.col("contamination_ratio") > self.max_contamination)
-            .select("doc_id")
-        )
-        kept = docs.join(contaminated, "doc_id", "left_anti")
-        kept, kept_obs = with_metrics(kept, n_kept=F.count(F.lit(1)))
-        # persisted: the decontamination chain (corpus scan, n-gram
-        # explode, broadcast probe, anti-join) feeds BOTH the mixture
-        # plan collect and the final manifest write — unpersisted it
-        # would run twice, doubling the most expensive stage
-        from pyspark import StorageLevel
-
-        kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
-
-        # 2. mixture: plan (bounded per-domain rows) then materialize
-        plan_rows = mixture_plan(
-            kept, self.domain_col, self.target_weights, self.max_epochs
-        ).collect()  # one row per target domain — a scalar envelope
-        epochs = {r[self.domain_col]: r["epochs"] for r in plan_rows}
-        missing = sorted(set(self.target_weights) - set(epochs))
-        if missing:
-            # a target domain absent from the (decontaminated) corpus
-            # means the configured mixture is unachievable — failing
-            # beats silently shipping a corpus with that share at zero
-            raise RuntimeError(
-                f"target domain(s) {missing} absent from "
-                f"{self.source_table}.{self.domain_col} after "
-                f"decontamination; achievable domains: {sorted(epochs)}"
+            # 1. decontamination: keep docs below the overlap threshold.
+            # Docs too short to produce n-grams have no contamination row —
+            # kept (nothing to match is the conservative KEEP direction
+            # here, opposite of dedup's novelty default, because dropping
+            # unprovably-contaminated data loses corpus for no evidence.)
+            bench = self.catalog.read_table(self.benchmark_table)
+            contaminated = (
+                ngram_contamination(docs, bench)
+                .filter(F.col("contamination_ratio") > self.max_contamination)
+                .select("doc_id")
             )
-        emitted = resample_epochs(
-            kept, key_col="doc_id", domain_col=self.domain_col, epochs=epochs
-        )
+            kept = docs.join(contaminated, "doc_id", "left_anti")
+            kept, kept_obs = with_metrics(kept, n_kept=F.count(F.lit(1)))
+            # persisted: the decontamination chain (corpus scan, n-gram
+            # explode, broadcast probe, anti-join) feeds BOTH the mixture
+            # plan collect and the final manifest write — unpersisted it
+            # would run twice, doubling the most expensive stage
+            from pyspark import StorageLevel
 
-        # 3. deterministic training order over (doc_id, copy)
-        key_hash = F.md5(
-            F.concat(
-                F.lit(self.shuffle_salt),
-                F.col("doc_id").cast("string"),
-                F.lit(":"),
-                F.col("copy").cast("string"),
+            kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
+
+            # 2. mixture: plan (bounded per-domain rows) then materialize
+            plan_rows = mixture_plan(
+                kept, self.domain_col, self.target_weights, self.max_epochs
+            ).collect()  # one row per target domain — a scalar envelope
+            epochs = {r[self.domain_col]: r["epochs"] for r in plan_rows}
+            missing = sorted(set(self.target_weights) - set(epochs))
+            if missing:
+                # a target domain absent from the (decontaminated) corpus
+                # means the configured mixture is unachievable — failing
+                # beats silently shipping a corpus with that share at zero
+                raise RuntimeError(
+                    f"target domain(s) {missing} absent from "
+                    f"{self.source_table}.{self.domain_col} after "
+                    f"decontamination; achievable domains: {sorted(epochs)}"
+                )
+            emitted = resample_epochs(
+                kept, key_col="doc_id", domain_col=self.domain_col, epochs=epochs
             )
-        )
-        ordered = global_rank(
-            emitted.withColumn("__h", key_hash),
-            [F.col("__h"), F.col("doc_id"), F.col("copy")],
-            rank_col="shuffle_pos",
-        ).select(*emitted.columns, "shuffle_pos")
 
-        # 4. pack at seq_len over the shuffled order. Token counting
-        # filters zero-length "words": split('', '\\s+') yields [''],
-        # so a raw size() would bill an empty/whitespace-only document
-        # one token and hand it a non-empty span in the manifest —
-        # blank docs must get the zero-token empty span the packing
-        # contract describes (same filter bpe_encode_stats applies).
-        packed = pack_chunks(
-            ordered.withColumn(
-                "n_tokens",
-                F.size(
-                    F.filter(
-                        words_of(F.col("text")),
-                        lambda w: F.length(w) >= 1,
-                    )
-                ).cast("long"),
-            ),
-            order_col="shuffle_pos",
-            tokens_col="n_tokens",
-            budget=self.seq_len,
-        ).select(
-            "doc_id", "copy", self.domain_col, "shuffle_pos", "n_tokens",
-            "start_off", "end_off", "chunk_first", "chunk_last", "n_chunks",
-        ).withColumn("load_date", F.lit(load_date))
-
-        # 5. write to a STAGING table first (jcap backup discipline):
-        # validating AFTER an overwrite of the destination would
-        # destroy the previous good manifest on the failure path
-        packed, out_obs = with_metrics(
-            packed,
-            n_emitted=F.count(F.lit(1)),
-            total_tokens=F.max("end_off"),
-        )
-        staging = f"{self.dest_table}__staging"
-        self.catalog.write_table(
-            packed, staging, mode="overwrite", partition_by=["load_date"]
-        )
-        kept.unpersist()
-
-        out = metrics_of(out_obs)
-        n_emitted = int(out["n_emitted"])
-        total_tokens = int(out["total_tokens"]) if n_emitted else 0
-        if n_emitted == 0:
-            raise RuntimeError(
-                "corpus prep produced an empty manifest; destination "
-                f"{self.dest_table} left untouched (staging: {staging})"
+            # 3. deterministic training order over (doc_id, copy)
+            key_hash = F.md5(
+                F.concat(
+                    F.lit(self.shuffle_salt),
+                    F.col("doc_id").cast("string"),
+                    F.lit(":"),
+                    F.col("copy").cast("string"),
+                )
             )
-        # dynamic per-partition replace: each run lands ONE load_date
-        # partition; prior dates survive, a re-run of the same date is
-        # idempotent, and downstream date-filtered readers get
-        # PartitionFilters in the scan instead of a full-table read —
-        # the 100 TB posture for a daily corpus-prep cadence
-        # (plan-gated in tests/test_jobs.py)
-        self.catalog.overwrite_partitions(
-            self.catalog.read_table(staging),
-            self.dest_table,
-            partition_by=["load_date"],
-        )
-        n_input = int(metrics_of(in_obs)["n_input"])
-        n_kept = int(metrics_of(kept_obs)["n_kept"])
+            ordered = global_rank(
+                emitted.withColumn("__h", key_hash),
+                [F.col("__h"), F.col("doc_id"), F.col("copy")],
+                rank_col="shuffle_pos",
+            ).select(*emitted.columns, "shuffle_pos")
 
-        end_time = datetime.now()
-        return {
-            "status": "Success",
-            "rows_processed": n_emitted,
-            "n_input": n_input,
-            "n_contaminated_dropped": n_input - n_kept,
-            "mixture_plan": {
-                r[self.domain_col]: {
-                    "n_avail": r["n_avail"],
-                    "n_target": r["n_target"],
-                    "epochs": r["epochs"],
-                }
-                for r in plan_rows
-            },
-            "total_tokens": total_tokens,
-            "n_chunks": (total_tokens + self.seq_len - 1) // self.seq_len,
-            "seq_len": self.seq_len,
-            "start_time": start_time,
-            "end_time": end_time,
-            "duration_seconds": (end_time - start_time).total_seconds(),
-            "source_table": self.source_table,
-            "destination_table": self.dest_table,
-            "load_date": load_date,
-        }
+            # 4. pack at seq_len over the shuffled order. Token counting
+            # filters zero-length "words": split('', '\\s+') yields [''],
+            # so a raw size() would bill an empty/whitespace-only document
+            # one token and hand it a non-empty span in the manifest —
+            # blank docs must get the zero-token empty span the packing
+            # contract describes (same filter bpe_encode_stats applies).
+            packed = pack_chunks(
+                ordered.withColumn(
+                    "n_tokens",
+                    F.size(
+                        F.filter(
+                            words_of(F.col("text")),
+                            lambda w: F.length(w) >= 1,
+                        )
+                    ).cast("long"),
+                ),
+                order_col="shuffle_pos",
+                tokens_col="n_tokens",
+                budget=self.seq_len,
+            ).select(
+                "doc_id", "copy", self.domain_col, "shuffle_pos", "n_tokens",
+                "start_off", "end_off", "chunk_first", "chunk_last", "n_chunks",
+            ).withColumn("load_date", F.lit(load_date))
+
+            # 5. write to a STAGING table first (jcap backup discipline):
+            # validating AFTER an overwrite of the destination would
+            # destroy the previous good manifest on the failure path
+            packed, out_obs = with_metrics(
+                packed,
+                n_emitted=F.count(F.lit(1)),
+                total_tokens=F.max("end_off"),
+            )
+            staging = f"{self.dest_table}__staging"
+            self.catalog.write_table(
+                packed, staging, mode="overwrite", partition_by=["load_date"]
+            )
+
+            out = metrics_of(out_obs)
+            n_emitted = int(out["n_emitted"])
+            total_tokens = int(out["total_tokens"]) if n_emitted else 0
+            if n_emitted == 0:
+                raise RuntimeError(
+                    "corpus prep produced an empty manifest; destination "
+                    f"{self.dest_table} left untouched (staging: {staging})"
+                )
+            # dynamic per-partition replace: each run lands ONE load_date
+            # partition; prior dates survive, a re-run of the same date is
+            # idempotent, and downstream date-filtered readers get
+            # PartitionFilters in the scan instead of a full-table read —
+            # the 100 TB posture for a daily corpus-prep cadence
+            # (plan-gated in tests/test_jobs.py)
+            self.catalog.overwrite_partitions(
+                self.catalog.read_table(staging),
+                self.dest_table,
+                partition_by=["load_date"],
+            )
+            n_input = int(metrics_of(in_obs)["n_input"])
+            n_kept = int(metrics_of(kept_obs)["n_kept"])
+
+            end_time = datetime.now()
+            return {
+                "status": "Success",
+                "rows_processed": n_emitted,
+                "n_input": n_input,
+                "n_contaminated_dropped": n_input - n_kept,
+                "mixture_plan": {
+                    r[self.domain_col]: {
+                        "n_avail": r["n_avail"],
+                        "n_target": r["n_target"],
+                        "epochs": r["epochs"],
+                    }
+                    for r in plan_rows
+                },
+                "total_tokens": total_tokens,
+                "n_chunks": (total_tokens + self.seq_len - 1) // self.seq_len,
+                "seq_len": self.seq_len,
+                "start_time": start_time,
+                "end_time": end_time,
+                "duration_seconds": (end_time - start_time).total_seconds(),
+                "source_table": self.source_table,
+                "destination_table": self.dest_table,
+                "load_date": load_date,
+            }

@@ -10,31 +10,59 @@ stream and, critically, without a single-partition global window.
 
 A naive ``sum(tokens) OVER (ORDER BY id)`` with no PARTITION BY moves
 the entire corpus through ONE task — the classic global-window scale
-killer. The distributed shape (same skeleton as
-``operators.ranks.global_rank``):
-
-1. ``repartitionByRange`` on the order key — sampled boundaries, fully
-   parallel, globally ordered across partitions;
-2. per-partition token totals → cumulative *partition* offsets
-   (metadata, ≤ npart rows, broadcast);
-3. global end offset = partition offset + intra-partition running sum
-   (windows partitioned by partition id run in parallel).
-
-Results are bit-identical at any ``npart`` because offsets derive from
-the total order, which range partitioning preserves (exact integer
-arithmetic throughout — guarded by the partition-count-independence
-test in ``tests/test_pretrain.py``).
+killer. Here a document's ``end_off`` is the running token total from
+``operators.ranks.running_total`` (range partition, partition offsets,
+parallel intra-partition sums). Results are bit-identical at any
+``npart`` because that helper evaluates the range partitioning once
+and the arithmetic is exact integer throughout (guarded by the
+partition-count-independence tests in ``tests/test_pretrain.py`` and
+``tests/test_determinism.py``).
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_PID = "__pack_pid"
-_OFF = "__pack_off"
+from ..operators.ranks import running_total
+
+
+def _pack_spans(
+    df: DataFrame,
+    order_col: str,
+    tokens_col: str,
+    budget: int,
+    base: int = 0,
+    npart: Optional[int] = None,
+) -> DataFrame:
+    """:func:`pack_chunks` in a token stream that starts at offset
+    ``base`` — the streaming packing sink continues the stream of its
+    previous batches this way."""
+    if budget < 1:
+        raise ValueError("budget must be >= 1")
+    end_off = running_total(
+        df, [F.col(order_col)], F.col(tokens_col), "end_off", npart=npart
+    ).select(*df.columns, (F.col("end_off") + F.lit(base)).alias("end_off"))
+    # integer DIV keeps the arithmetic exact (floor(double/double) would
+    # wobble in the low bits at 100T-token offsets)
+    return (
+        end_off.withColumn(
+            "start_off", F.col("end_off") - F.col(tokens_col).cast("bigint")
+        )
+        .withColumn("chunk_first", F.expr(f"start_off DIV {budget}"))
+        .withColumn(
+            "chunk_last",
+            F.greatest(
+                F.col("chunk_first"),
+                F.expr(f"(end_off - 1) DIV {budget}"),
+            ),
+        )
+        .withColumn(
+            "n_chunks", F.col("chunk_last") - F.col("chunk_first") + F.lit(1)
+        )
+    )
 
 
 def pack_chunks(
@@ -51,51 +79,7 @@ def pack_chunks(
     ``tokens_col`` is the document's token count (≥ 0; a zero-token
     document gets an empty span and the chunk containing its offset).
     """
-    if budget < 1:
-        raise ValueError("budget must be >= 1")
-    npart = npart or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(npart, F.col(order_col)).withColumn(
-        _PID, F.spark_partition_id()
-    )
-    sizes = ranged.groupBy(_PID).agg(
-        F.sum(tokens_col).cast("bigint").alias("_ptok")
-    )
-    # bounded: partition METADATA — ≤ npart rows regardless of data volume
-    w_prev = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.select(
-        _PID,
-        F.coalesce(F.sum("_ptok").over(w_prev), F.lit(0)).alias(_OFF),
-    )
-    w_local = (
-        Window.partitionBy(_PID)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    end_off = (
-        F.col(_OFF) + F.sum(tokens_col).over(w_local).cast("bigint")
-    ).alias("end_off")
-    out = (
-        ranged.join(F.broadcast(offsets), _PID)
-        .select(*df.columns, end_off)
-        .withColumn(
-            "start_off", F.col("end_off") - F.col(tokens_col).cast("bigint")
-        )
-    )
-    # integer DIV keeps the arithmetic exact (floor(double/double) would
-    # wobble in the low bits at 100T-token offsets)
-    return (
-        out.withColumn("chunk_first", F.expr(f"start_off DIV {budget}"))
-        .withColumn(
-            "chunk_last",
-            F.greatest(
-                F.col("chunk_first"),
-                F.expr(f"(end_off - 1) DIV {budget}"),
-            ),
-        )
-        .withColumn(
-            "n_chunks", F.col("chunk_last") - F.col("chunk_first") + F.lit(1)
-        )
-    )
+    return _pack_spans(df, order_col, tokens_col, budget, npart=npart)
 
 
 def ordered_budget_prefix(
@@ -111,41 +95,21 @@ def ordered_budget_prefix(
     token count stays ≤ ``budget`` — the "best docs until the budget is
     spent" selection a fixed-size pretraining mixture makes.
 
-    Same distributed skeleton as :func:`pack_chunks` (range partition on
-    the order key → per-partition totals → broadcast partition offsets →
-    parallel intra-partition running sums): no single-partition global
-    window, bit-identical at any ``npart``. Appends ``cum_tokens`` (the
-    running total INCLUDING the row) to the selected rows; a document
-    that would cross the budget boundary is excluded (ordered prefix,
-    not knapsack — deterministic and one-pass).
+    ``cum_tokens`` (the running total INCLUDING the row, appended to the
+    selected rows) is a ``running_total``, so there is no single-partition
+    global window and the selection is bit-identical at any ``npart``. A
+    document that would cross the budget boundary is excluded (ordered
+    prefix, not knapsack — deterministic and one-pass).
     """
     if budget < 0:
         raise ValueError("budget must be >= 0")
-    npart = npart or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(npart, *order_by).withColumn(
-        _PID, F.spark_partition_id()
+    return (
+        running_total(
+            df, order_by, F.col(tokens_col), "cum_tokens", npart=npart
+        )
+        .filter(F.col("cum_tokens") <= budget)
+        .select(*df.columns, "cum_tokens")
     )
-    sizes = ranged.groupBy(_PID).agg(
-        F.sum(tokens_col).cast("bigint").alias("_ptok")
-    )
-    # bounded: partition METADATA — ≤ npart rows regardless of data volume
-    w_prev = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.select(
-        _PID,
-        F.coalesce(F.sum("_ptok").over(w_prev), F.lit(0)).alias(_OFF),
-    )
-    w_local = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = ranged.join(F.broadcast(offsets), _PID).select(
-        *df.columns,
-        (F.col(_OFF) + F.sum(tokens_col).over(w_local).cast("bigint")).alias(
-            "cum_tokens"
-        ),
-    )
-    return out.filter(F.col("cum_tokens") <= budget)
 
 
 def packing_summary(packed: DataFrame, budget: int) -> DataFrame:

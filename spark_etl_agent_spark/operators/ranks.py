@@ -1,25 +1,26 @@
-"""Distributed global ranking — exact ``ntile``/``row_number``/
-``quantile_cont`` over an unbounded frame WITHOUT a single-partition
-sort or a whole-group memory buffer.
+"""Distributed global ordering — exact ``row_number``/``ntile``/
+``quantile_cont`` and running totals over an unbounded frame WITHOUT a
+single-partition sort or a whole-group memory buffer.
 
 A global ``Window.orderBy(...)`` moves every row to one partition; at
 100 TB (or even a tens-of-millions-row entity aggregate) that serial
-sort is the bottleneck. The scalable shape:
-
-1. range-partition on the sort key (``repartitionByRange`` — sampled
-   boundaries, fully parallel, globally ordered across partitions);
-2. per-partition sizes → cumulative offsets. Partition *metadata*
-   (≤ npart rows), so its tiny ordering window is bounded regardless
-   of data volume;
-3. global rank = partition offset + intra-partition ``row_number``
-   (windows partitioned by partition id run in parallel);
-4. for ntile, the exact SQL bucket formula from (rank, n): the first
-   ``n mod k`` buckets get ``n div k + 1`` rows, the rest ``n div k``.
+sort is the bottleneck. :func:`running_total` is the one scalable
+shape, and every operator here and in ``llm.packing`` is a thin caller:
+the frame is range-partitioned on the sort key, each partition's total
+becomes a cumulative offset (partition *metadata*, ≤ npart rows per
+group), and a row's running total is its partition's offset plus the
+intra-partition running sum.
 
 Results are bit-identical to the single-partition window at ANY
-``npart`` (guarded by ``tests/test_determinism.py``) because ranks are
-computed from the total order, which range partitioning preserves —
-the sampled boundary *placement* only moves work, never answers.
+``npart`` (guarded by ``tests/test_determinism.py``) because the range
+partitioning is evaluated ONCE: the ranged frame is persisted, so the
+partition sizes and the rows they offset come from one sample of range
+bounds. Evaluated twice — once for the sizes, once for the rows — a
+post-shuffle input with no fixed row order samples different bounds on
+each side, and offsets land on other partitions' rows. Given one
+partitioning, the answer is a function of the total order alone; the
+boundary *placement* only moves work. Callers in a long-lived session
+release the persist with ``core.cache.scoped_caches``.
 
 The sort key must be a total order (include a unique tie-break column,
 e.g. the primary key) — engine-dependent tie behavior is the other
@@ -29,15 +30,67 @@ classic source of cross-engine hash mismatches.
 from __future__ import annotations
 
 from functools import reduce
-from typing import List, Optional
+from typing import List, Optional, Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _PID = "__rank_pid"
 _OFF = "__rank_off"
 _N = "__rank_n"
-_LRN = "__rank_lrn"
+_PSZ = "__rank_psz"
+
+
+def running_total(
+    df: DataFrame,
+    order_by: List[Column],
+    weight: Column,
+    out_col: str,
+    groups: Sequence[str] = (),
+    npart: Optional[int] = None,
+) -> DataFrame:
+    """Append ``out_col``, the inclusive running sum (bigint) of
+    ``weight`` in ``order_by`` order within each ``groups`` group, and
+    ``__rank_n``, the group's total. ``order_by`` must be a total order
+    within a group; ``npart`` defaults to the cluster's parallelism.
+    NULL group keys form a real group (the offsets join is null-safe).
+    """
+    npart = npart or df.sparkSession.sparkContext.defaultParallelism
+    ranged = (
+        df.repartitionByRange(npart, *[F.col(g) for g in groups], *order_by)
+        .withColumn(_PID, F.spark_partition_id())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    sizes = ranged.groupBy(*groups, _PID).agg(
+        F.sum(weight).cast("bigint").alias(_PSZ)
+    )
+    # bounded: partition METADATA — ≤ npart rows per group
+    w_before = (
+        Window.partitionBy(*groups)
+        .orderBy(_PID)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = sizes.select(
+        *[F.col(g).alias(f"_og_{g}") for g in groups],
+        F.col(_PID).alias("_opid"),
+        F.coalesce(F.sum(_PSZ).over(w_before), F.lit(0)).alias(_OFF),
+        F.sum(_PSZ).over(Window.partitionBy(*groups)).alias(_N),
+    )
+    off_cond = reduce(
+        lambda a, b: a & b,
+        [F.col(g).eqNullSafe(F.col(f"_og_{g}")) for g in groups],
+        F.col(_PID) == F.col("_opid"),
+    )
+    w_local = (
+        Window.partitionBy(_PID, *groups)
+        .orderBy(*order_by)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    total = (F.col(_OFF) + F.sum(weight).over(w_local)).cast("bigint")
+    return ranged.join(F.broadcast(offsets), off_cond).select(
+        *[c for c in df.columns if c != out_col], total.alias(out_col), _N
+    )
 
 
 def global_rank(
@@ -47,29 +100,10 @@ def global_rank(
     npart: Optional[int] = None,
 ) -> DataFrame:
     """Append a 1-based dense global ``row_number`` over ``order_by``
-    (which must be a total order) with no single-partition data stage.
-    ``npart`` defaults to the cluster's parallelism."""
-    npart = npart or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(npart, *order_by).withColumn(
-        _PID, F.spark_partition_id()
-    )
-    sizes = ranged.groupBy(_PID).agg(F.count(F.lit(1)).alias("_psz"))
-    # bounded: partition METADATA — ≤ npart rows regardless of data volume
-    w_prev = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy(_PID).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = sizes.select(
-        _PID,
-        F.coalesce(F.sum("_psz").over(w_prev), F.lit(0)).alias(_OFF),
-        F.sum("_psz").over(w_all).alias(_N),
-    )
-    w_local = Window.partitionBy(_PID).orderBy(*order_by)
-    return (
-        ranged.withColumn(_LRN, F.row_number().over(w_local))
-        .join(F.broadcast(offsets), _PID)
-        .withColumn(rank_col, (F.col(_OFF) + F.col(_LRN)).cast("bigint"))
-    )
+    (which must be a total order) with no single-partition data stage:
+    the running count of rows. Also appends ``__rank_n``, the row
+    count."""
+    return running_total(df, order_by, F.lit(1), rank_col, npart=npart)
 
 
 def grouped_quantile_cont(
@@ -86,9 +120,8 @@ def grouped_quantile_cont(
 
     Spark's exact ``percentile()`` aggregate buffers every value of a
     group in memory; with a handful of groups over a 100 TB fact table
-    that is an OOM by construction. Here the values are range-partitioned
-    on (group, value), ranked per group via partition-size offsets
-    (metadata, ≤ |groups|·npart rows), and only the TWO ranked rows each
+    that is an OOM by construction. Here each value's rank in its group
+    is a :func:`running_total` of rows, and only the TWO ranked rows each
     quantile needs are picked out and interpolated — one extra range
     shuffle, constant memory everywhere.
 
@@ -97,83 +130,33 @@ def grouped_quantile_cont(
     first — SQL ``quantile_cont`` / ``percentile`` semantics; a group
     with only NULLs produces no row (matching the aggregate's NULL by
     absence of interpolable data). NULL group KEYS are kept as a real
-    group (all internal joins are null-safe), matching
-    ``groupBy().agg(percentile(...))``."""
-    npart = npart or df.sparkSession.sparkContext.defaultParallelism
-    gcols = [F.col(g) for g in groups]
-    ranged = df.filter(F.col(value).isNotNull()).repartitionByRange(
-        npart, *gcols, F.col(value)
-    ).withColumn(_PID, F.spark_partition_id())
-    sizes = ranged.groupBy(*groups, _PID).agg(F.count(F.lit(1)).alias("_psz"))
-    w_prev = (
-        Window.partitionBy(*groups)
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = (
-        Window.partitionBy(*groups)
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    offsets = sizes.select(
-        *groups,
-        F.col(_PID),
-        F.coalesce(F.sum("_psz").over(w_prev), F.lit(0)).alias(_OFF),
-        F.sum("_psz").over(w_all).alias(_N),
-    )
-    w_local = Window.partitionBy(_PID, *groups).orderBy(F.col(value))
-    # Null-safe join on the group keys: a plain name-list equi-join
-    # would silently drop NULL-keyed groups, which Spark's own
-    # percentile()-over-groupBy keeps as a real group.
-    off_re = offsets.select(
-        *[F.col(g).alias(f"_og_{g}") for g in groups],
-        F.col(_PID).alias("_opid"),
-        _OFF,
-        _N,
-    )
-    off_cond = reduce(
-        lambda a, b: a & b,
-        [F.col(g).eqNullSafe(F.col(f"_og_{g}")) for g in groups]
-        + [F.col(_PID) == F.col("_opid")],
-    )
-    ranked = (
-        ranged.withColumn(_LRN, F.row_number().over(w_local))
-        .join(F.broadcast(off_re), off_cond)
-        .drop("_opid", *[f"_og_{g}" for g in groups])
-        .withColumn("_rank", F.col(_OFF) + F.col(_LRN))
-    )
-
-    # one (group, q) target row set: ranks ⌊h⌋+1 and min(⌊h⌋+2, n)
-    qdf = df.sparkSession.createDataFrame(
-        [(float(q),) for q in qs], "q double"
-    )
-    pos = (
-        offsets.select(*groups, _N)
-        .distinct()
-        .crossJoin(F.broadcast(qdf))
-        .withColumn("_h", (F.col(_N) - 1) * F.col("q"))
-        .select(
-            *[F.col(g).alias(f"_pg_{g}") for g in groups],
-            "q",
-            (F.floor("_h") + 1).alias("_rlo"),
-            F.least(F.floor("_h") + 2, F.col(_N)).alias("_rhi"),
-            (F.col("_h") - F.floor("_h")).alias("_frac"),
-        )
-    )
-    cond = [F.col(g).eqNullSafe(F.col(f"_pg_{g}")) for g in groups]
-    cond.append(
-        (F.col("_rank") == F.col("_rlo")) | (F.col("_rank") == F.col("_rhi"))
-    )
-    picked = ranked.join(
-        F.broadcast(pos), reduce(lambda a, b: a & b, cond)
-    ).select(
-        *groups,
-        "q",
-        "_rlo",
-        "_rhi",
-        "_frac",
+    group, matching ``groupBy().agg(percentile(...))``."""
+    ranked = running_total(
+        df.filter(F.col(value).isNotNull()),
+        [F.col(value)],
+        F.lit(1),
         "_rank",
-        F.col(value).cast("double").alias("_v"),
+        groups=groups,
+        npart=npart,
+    )
+    # per (row, q): the target ranks ⌊h⌋+1 and min(⌊h⌋+2, n)
+    h = (F.col(_N) - 1) * F.col("q")
+    picked = (
+        ranked.withColumn(
+            "q", F.explode(F.array(*[F.lit(float(q)) for q in qs]))
+        )
+        .select(
+            *groups,
+            "q",
+            "_rank",
+            (F.floor(h) + 1).alias("_rlo"),
+            F.least(F.floor(h) + 2, F.col(_N)).alias("_rhi"),
+            (h - F.floor(h)).alias("_frac"),
+            F.col(value).cast("double").alias("_v"),
+        )
+        .filter(
+            (F.col("_rank") == F.col("_rlo")) | (F.col("_rank") == F.col("_rhi"))
+        )
     )
     per_q = picked.groupBy(*groups, "q", "_frac").agg(
         F.min(F.when(F.col("_rank") == F.col("_rlo"), F.col("_v"))).alias("_vlo"),
@@ -215,6 +198,4 @@ def parallel_ntile(
         .otherwise(rem + F.ceil((rank - cut) / F.greatest(q, F.lit(1))))
         .cast("int")
     )
-    return ranked.withColumn(bucket_col, bucket).drop(
-        _PID, _OFF, _N, _LRN, "__rank"
-    )
+    return ranked.withColumn(bucket_col, bucket).drop(_N, "__rank")

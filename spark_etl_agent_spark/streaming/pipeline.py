@@ -537,7 +537,8 @@ def streaming_packing_sink(
     import json
     import os
 
-    from ..llm.packing import pack_chunks
+    from ..core.cache import scoped_caches
+    from ..llm.packing import _pack_spans
 
     state_file = os.path.join(state_path, "packing_state.json")
 
@@ -559,40 +560,24 @@ def streaming_packing_sink(
         if batch_id <= st["batch_id"]:
             return  # replayed batch: manifest already written
         base = int(st["end_off"])
-        batch_df = batch_df.localCheckpoint()
-        n = batch_df.count()
-        if n == 0:
-            _write_state({"batch_id": batch_id, "end_off": base})
-            if audit is not None:
-                audit.append((batch_id, 0, base))
-            return
-        packed = pack_chunks(
-            batch_df, order_col=order_col, tokens_col=tokens_col,
-            budget=budget,
-        )
-        # shift into the stream's global offset space, then re-derive
-        # the chunk range from the shifted offsets (exact integer DIV)
-        shifted = (
-            packed.withColumn("start_off", F.col("start_off") + F.lit(base))
-            .withColumn("end_off", F.col("end_off") + F.lit(base))
-            .withColumn("chunk_first", F.expr(f"start_off DIV {budget}"))
-            .withColumn(
-                "chunk_last",
-                F.greatest(
-                    F.col("chunk_first"), F.expr(f"(end_off - 1) DIV {budget}")
-                ),
-            )
-            .withColumn(
-                "n_chunks",
-                F.col("chunk_last") - F.col("chunk_first") + F.lit(1),
-            )
-            .localCheckpoint()  # manifest computed once; max() below reuses
-        )
-        new_end = shifted.agg(F.max("end_off")).collect()[0][0]
-        manifest_writer(shifted, batch_id)
-        _write_state({"batch_id": batch_id, "end_off": int(new_end)})
+        # the batch checkpoint and the packing's ranged frame are
+        # batch-scoped; released once the manifest is written
+        with scoped_caches(batch_df.sparkSession):
+            batch_df = batch_df.localCheckpoint()
+            n, n_tokens = batch_df.agg(
+                F.count(F.lit(1)), F.sum(F.col(tokens_col).cast("bigint"))
+            ).first()
+            new_end = base + (n_tokens or 0)
+            if n:
+                manifest_writer(
+                    _pack_spans(
+                        batch_df, order_col, tokens_col, budget, base=base
+                    ),
+                    batch_id,
+                )
+        _write_state({"batch_id": batch_id, "end_off": new_end})
         if audit is not None:
-            audit.append((batch_id, n, int(new_end)))
+            audit.append((batch_id, n, new_end))
 
     return pack_batch
 

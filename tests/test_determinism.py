@@ -195,3 +195,83 @@ def test_grouped_quantile_cont_matches_percentile_any_npart(spark, sf_dir):
             ).collect()
         }
         assert got == expected, f"npart={npart}"
+
+
+def test_range_offset_operators_exact_on_skewed_post_shuffle_input(spark, sf_dir):
+    """Every operator built on the range-partition offsets must be exact
+    when its input is post-shuffle and skewed. Such input has no fixed
+    row order, so two evaluations of the range partitioning sample
+    different bounds; an operator whose partition sizes and rows came
+    from two evaluations would add offsets to the wrong partitions. The
+    consumers keep ``text``, which the sizes side prunes, so Catalyst
+    cannot reuse one exchange for both. The reference is the
+    single-window answer computed from the collected rows."""
+    from itertools import accumulate
+
+    from pyspark.sql import functions as F
+
+    from spark_etl_agent_spark.llm.packing import (
+        ordered_budget_prefix,
+        pack_chunks,
+    )
+    from spark_etl_agent_spark.operators.ranks import (
+        global_rank,
+        grouped_quantile_cont,
+    )
+
+    skewed = (
+        load(spark, sf_dir, "documents")
+        .crossJoin(spark.range(3).withColumnRenamed("id", "copy"))
+        .repartition(8, F.col("doc_id") % 10 == 0)
+        .select(
+            (F.col("doc_id") * 3 + F.col("copy")).alias("key"),
+            "text",
+            # a NULL group key is a real group for the quantiles
+            F.when(F.col("doc_id") % 7 != 0, F.col("lang")).alias("lang"),
+            F.size(F.split("text", " ")).cast("bigint").alias("n_tok"),
+        )
+    )
+    ref = sorted((r.key, r.n_tok) for r in skewed.select("key", "n_tok").collect())
+    keys = [k for k, _ in ref]
+    cum = list(accumulate(t for _, t in ref))
+    budget = cum[len(cum) // 2]
+    qs = [0.1, 0.5, 0.9]
+    expected_q = {
+        r.lang: tuple(r.q)
+        for r in skewed.groupBy("lang")
+        .agg(F.expr(f"percentile(n_tok, array({', '.join(map(str, qs))}))").alias("q"))
+        .collect()
+    }
+    assert None in expected_q and len(keys) == 1500
+
+    for npart in (3, 4):
+        ranked = global_rank(skewed, [F.col("key")], npart=npart).select(
+            "key", "rank", "text"
+        )
+        assert sorted((r.key, r.rank) for r in ranked.collect()) == list(
+            zip(keys, range(1, len(keys) + 1))
+        ), f"global_rank npart={npart}"
+
+        packed = pack_chunks(skewed, "key", "n_tok", 64, npart=npart).select(
+            "key", "start_off", "end_off", "text"
+        )
+        assert sorted(
+            (r.key, r.start_off, r.end_off) for r in packed.collect()
+        ) == [
+            (k, c - t, c) for (k, t), c in zip(ref, cum)
+        ], f"pack_chunks npart={npart}"
+
+        prefix = ordered_budget_prefix(
+            skewed, "n_tok", budget, [F.col("key")], npart=npart
+        ).select("key", "cum_tokens", "text")
+        assert sorted((r.key, r.cum_tokens) for r in prefix.collect()) == [
+            (k, c) for k, c in zip(keys, cum) if c <= budget
+        ], f"ordered_budget_prefix npart={npart}"
+
+        got_q = {
+            r.lang: (r.q_10, r.q_50, r.q_90)
+            for r in grouped_quantile_cont(
+                skewed, ["lang"], "n_tok", qs, npart=npart
+            ).collect()
+        }
+        assert got_q == expected_q, f"grouped_quantile_cont npart={npart}"

@@ -604,12 +604,17 @@ def test_corpus_prep_etl_end_to_end(spark, sf_dir, job_service, warehouse):
         mode="overwrite",
     )
 
+    from spark_etl_agent_spark.core.cache import _persistent_rdd_ids
+
+    before = _persistent_rdd_ids(spark)
     result = job_service.execute_job(
         {"id": "p1", "name": "prep", "type": "corpus_prep_etl",
          "load_date": "2026-08-14"}
     )
     assert result["status"] == "Success", result.get("error")
     assert result["environment"] == "Corpus"
+    # the run releases every persist it made
+    assert _persistent_rdd_ids(spark) == before
     n_in = result["n_input"]
     assert n_in == docs.count()
     # the benchmark docs themselves are verbatim in the corpus ->
@@ -736,6 +741,7 @@ def test_corpus_prep_raises_on_absent_target_domain(spark, tmp_path):
     import pyspark.sql.functions as F2
     import pytest as _pytest
 
+    from spark_etl_agent_spark.core.cache import _persistent_rdd_ids
     from spark_etl_agent_spark.jobs.pretrain import CorpusPrepService
     from spark_etl_agent_spark.sources.catalog import Catalog
 
@@ -750,8 +756,11 @@ def test_corpus_prep_raises_on_absent_target_domain(spark, tmp_path):
         mode="overwrite",
     )
     svc = CorpusPrepService(cat)
+    before = _persistent_rdd_ids(spark)
     with _pytest.raises(RuntimeError, match="zh"):
         svc.run_corpus_prep_etl("2026-08-14")
+    # the failure path releases the decontaminated corpus it persisted
+    assert _persistent_rdd_ids(spark) == before
 
 
 def test_quality_monitor_etl_end_to_end(spark, tmp_path):

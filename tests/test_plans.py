@@ -273,14 +273,25 @@ def test_revenue_concentration_no_global_data_window(spark, sf_dir):
     unpartitioned windows run over the partition-metadata frame (bounded
     by numPartitions), never the data. The range exchange proves the
     parallel global ordering."""
+    import re
+
+    from spark_etl_agent_spark.operators.ranks import _PID, _PSZ
+
     plan = plan_of(SPECS["revenue_concentration"].spark(spark, sf_dir))
     assert "ntile" not in plan
     assert "rangepartitioning" in plan
-    # the row_number window (the only per-row data window) partitions on
-    # _pid; the unpartitioned offset windows see only the ≤numPartitions
-    # size rows
-    win_lines = [l for l in plan.splitlines() if "row_number()" in l]
-    assert win_lines and all("_pid" in l for l in win_lines), win_lines
+    windows = [
+        ln
+        for ln in plan.splitlines()
+        if ln.startswith("Arguments: [") and "windowspecdefinition" in ln
+    ]
+    by_pid = [a for a in windows if re.search(rf"\], \[{_PID}#\d+[,\]]", a)]
+    # the running-count window (the only per-row data window) partitions
+    # on the partition id; the unpartitioned offset windows see only the
+    # ≤numPartitions size rows
+    assert any("sum(1)" in a for a in by_pid), windows
+    for a in windows:
+        assert a in by_pid or f"sum({_PSZ}#" in a, a
 
 
 def test_minhash_band_join_is_equi_join(spark, sf_dir):

@@ -143,21 +143,21 @@ def test_pack_has_no_single_partition_global_window(spark, sf_dir):
     """The scale gate: the executed plan must not contain a window over
     an empty partition spec on the DATA path (the offsets table —
     metadata, <= npart rows — is the only allowed global window)."""
+    import re
+
+    from spark_etl_agent_spark.operators.ranks import _PID, _PSZ
     from spark_etl_agent_spark.queries.pretrain import pack_documents
 
     plan = pack_documents(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    # data-side window must be partitioned by the pack partition id
-    data_windows = [
-        ln for ln in plan.splitlines() if "Window" in ln and "__pack_pid" in ln
-    ]
-    assert data_windows, plan
+    windows = [ln for ln in plan.splitlines() if "Window [" in ln]
+    by_pid = [ln for ln in windows if re.search(rf"\], \[{_PID}#\d+[,\]]", ln)]
+    # data-side window must be partitioned by the range partition id
+    assert any("sum(n_tokens" in ln for ln in by_pid), plan
     # the global (unpartitioned) windows in the plan may only order the
-    # metadata offsets table, whose input is the tiny _ptok aggregate
-    for ln in plan.splitlines():
-        if re.search(r"Window \[sum\(n_tokens", ln):
-            assert "__pack_pid" in ln, ln
+    # metadata offsets table, whose input is the tiny partition-size
+    # aggregate
+    for ln in windows:
+        assert ln in by_pid or f"sum({_PSZ}#" in ln, ln
 
 
 # ---------------------------------------------------------------------------

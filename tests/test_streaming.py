@@ -695,6 +695,30 @@ def test_streaming_packing_spans_continue_across_batches(spark, tmp_path):
     assert spark.read.parquet(str(manifest_dir / "batch=*")).count() == 5
 
 
+def test_streaming_packing_sink_releases_batch_caches(spark, tmp_path):
+    """Each packing batch releases the storage it takes (the batch
+    checkpoint and the packing's ranged frame), so a long-running
+    stream does not accumulate one set of persisted RDDs per batch."""
+    from spark_etl_agent_spark.core.cache import _persistent_rdd_ids
+    from spark_etl_agent_spark.streaming.pipeline import streaming_packing_sink
+
+    spans: list = []
+
+    def writer(df, batch_id):
+        spans.append(
+            sorted(tuple(r) for r in df.select("doc_id", "start_off", "end_off").collect())
+        )
+
+    sink = streaming_packing_sink(str(tmp_path / "state"), writer, budget=10)
+    schema = "doc_id long, n_tokens long"
+    before = _persistent_rdd_ids(spark)
+    sink(spark.createDataFrame([(1, 4), (2, 8)], schema), 0)
+    assert _persistent_rdd_ids(spark) == before
+    sink(spark.createDataFrame([(3, 9)], schema), 1)
+    assert _persistent_rdd_ids(spark) == before
+    assert spans == [[(1, 0, 4), (2, 4, 12)], [(3, 12, 21)]]
+
+
 def test_events_stream_reads_directory_layout(spark, sf_dir, tmp_path, batch_events):
     """A real table is a DIRECTORY of part files; events_stream must
     stream it identically to the single-file fixture layout (a glob on
