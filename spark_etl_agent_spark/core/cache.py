@@ -9,9 +9,9 @@ wrong tool twice over: it evicts caches owned by *unrelated* concurrent
 work in the same session, and it does not release RDD-level
 ``localCheckpoint`` storage at all.
 
-``scoped_caches`` snapshots the JVM's persistent-RDD map around a
-block and unpersists exactly the entries the block created — other
-owners' caches are untouched.
+``scoped_caches`` snapshots the session's CacheManager entries and the
+JVM's persistent-RDD map around a block and releases exactly the
+entries the block created — other owners' caches are untouched.
 """
 
 from __future__ import annotations
@@ -29,23 +29,50 @@ def _persistent_rdd_ids(spark: SparkSession) -> set:
     return {jid for jid in jmap.keySet().toArray()}
 
 
+def _cached_entries(spark: SparkSession):
+    """The session CacheManager's ``CachedData`` entries as a
+    ``java.util.List`` — the registry a ``DataFrame.persist`` adds its
+    plan to, which an RDD unpersist alone leaves in place."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    return spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        cache_manager.cachedData()
+    )
+
+
 @contextmanager
-def scoped_caches(spark: SparkSession, blocking: bool = False):
-    """Unpersist every RDD/DataFrame cache *created inside* the block,
-    leaving pre-existing caches alone.
+def scoped_caches(spark: SparkSession):
+    """Release every DataFrame cache and persisted RDD *created inside*
+    the block, leaving pre-existing caches alone.
 
     >>> with scoped_caches(spark):
-    ...     verdicts = incremental_neardup_verdicts(index, batch)
+    ...     verdicts = incremental_neardup_verdicts_indexed(index, batch)
     ...     verdicts.count()      # probe's internal persists live here
     ... # ...and are released here; the caller's own caches survive
     """
-    before = _persistent_rdd_ids(spark)
+    jvm = spark._jvm
+    # identity set: a CachedData is a case class, and its structural
+    # equals would compare whole plans
+    cached_before = jvm.java.util.Collections.newSetFromMap(
+        jvm.java.util.IdentityHashMap()
+    )
+    cached_before.addAll(_cached_entries(spark))
+    rdds_before = _persistent_rdd_ids(spark)
     try:
         yield
     finally:
+        created = jvm.java.util.ArrayList(_cached_entries(spark))
+        created.removeAll(cached_before)
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+        for entry in created:
+            # cascade=False: drop this entry only, never a dependent
+            # cache owned outside the block
+            cache_manager.uncacheQuery(
+                spark._jsparkSession, entry.plan(), False, False
+            )
+        # localCheckpoints have no CacheManager entry
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for jid in jmap.keySet().toArray():
-            if jid not in before:
+            if jid not in rdds_before:
                 rdd = jmap.get(jid)
                 if rdd is not None:
-                    rdd.unpersist(blocking)
+                    rdd.unpersist(False)

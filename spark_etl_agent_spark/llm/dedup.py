@@ -573,7 +573,6 @@ def lsh_probe_pairs(
     id_col: str = "doc_id",
     n_hashes: int = N_MINHASHES,
     band_size: int = BAND_SIZE,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Asymmetric LSH probe: candidate (batch, index) pairs — the
     incremental-ingest shape. The corpus index is NOT self-joined;
@@ -581,23 +580,13 @@ def lsh_probe_pairs(
     through a broadcast hash join, so probing N new docs against a
     100 TB index costs one index scan regardless of index size.
 
-    ``broadcast_batch=False`` drops the hint for batches too large for
-    executor memory (a backfill replaying months of ingest): the probe
-    becomes a plain equi-join on the band keys — one bounded shuffle of
-    both banded tables, the same plan family as ``lsh_candidate_pairs``
-    minus the self-join — and AQE may still choose broadcast at runtime
-    if the batch turns out small.
-
     Returns distinct ``(id_batch, id_index)`` candidates."""
     idx = _banded(index_sigs, id_col, n_hashes, band_size)
     new = _banded(batch_sigs, id_col, n_hashes, band_size)
-    probe = new.alias("n")
-    if broadcast_batch:
-        probe = F.broadcast(probe)
     return (
         idx.alias("i")
         .join(
-            probe,
+            F.broadcast(new.alias("n")),
             (F.col("i.band_idx") == F.col("n.band_idx"))
             & (F.col("i.band_key") == F.col("n.band_key")),
         )
@@ -609,123 +598,24 @@ def lsh_probe_pairs(
     )
 
 
-def incremental_neardup_verdicts(
-    index_docs: DataFrame,
-    batch_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_jaccard: float = 0.6,
-    broadcast_batch: bool = True,
-    check_disjoint_ids: bool = True,
-) -> DataFrame:
-    """Per-new-document ingest verdict against an existing corpus:
-    ``(id, n_matches, best_match_id, best_jaccard, is_novel)`` where a
-    match is an index document with exact shingle-Jaccard ≥
-    ``min_jaccard`` among the LSH candidates; the best match breaks
-    Jaccard ties on the smaller index id (total order → deterministic
-    across engines and partitionings).
-
-    Documents too short to shingle (< k words) have nothing to probe
-    and are reported novel with ``n_matches = 0`` — the conservative
-    ingest decision (they can still be caught by exact dedup).
-
-    Scale: signatures are two uniform-key aggregations; the probe join
-    broadcasts only the batch bands; Jaccard verification touches only
-    candidate pairs. Nothing in the plan grows with index × batch.
-
-    Batch and index ids must be disjoint: a replayed id with changed
-    text would be judged against its own earlier version and, when
-    novel, accepted as a second document under a taken id. That
-    contract is therefore enforced (``check_disjoint_ids``): one
-    broadcast id-semi-join against the index, limit-1, raising on the
-    first collision. Disable it only when the caller has already proven
-    disjointness (e.g. right after an exact-id anti-join).
-    """
-    if check_disjoint_ids:
-        batch_ids = batch_docs.select(id_col).distinct()
-        if broadcast_batch:
-            batch_ids = F.broadcast(batch_ids)
-        collision = (
-            index_docs.select(id_col)
-            .join(batch_ids, id_col)
-            .limit(1)
-            .collect()  # scalar guard envelope, never data rows
-        )
-        if collision:
-            raise ValueError(
-                "incremental_neardup_verdicts: document id "
-                f"{collision[0][0]!r} appears in BOTH the batch and the "
-                "index; a changed text under a taken id would be "
-                "accepted as a second document with that id. Drop or "
-                "re-key replayed ids before probing (the streaming "
-                "ingest sink's exact-hash anti-join does not cover "
-                "same-id different-text replays)."
-            )
-    pairs = lsh_probe_pairs(
-        minhash_signatures(index_docs, text_col, id_col),
-        minhash_signatures(batch_docs, text_col, id_col),
-        id_col,
-        broadcast_batch=broadcast_batch,
-    ).select(
-        F.col("id_batch").alias("id_a"), F.col("id_index").alias("id_b")
-    )
-    verified = jaccard_verify(batch_docs, pairs, text_col, id_col, index_docs)
-    return _novelty_verdicts(
-        batch_docs.select(F.col(id_col)), verified, id_col, min_jaccard
-    )
-
-
-def _novelty_verdicts(
-    batch_ids: DataFrame,
-    verified: DataFrame,
-    id_col: str,
-    min_jaccard: float,
-) -> DataFrame:
-    """Shared tail of the incremental-verdict shapes: fold verified
-    candidate pairs into per-batch-document ``(n_matches, best_match_id,
-    best_jaccard, is_novel)`` rows; non-candidates are novel."""
-    matches = verified.filter(F.col("jaccard") >= min_jaccard)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id_a").orderBy(
-        F.col("jaccard").desc(), F.col("id_b").asc()
-    )
-    best = (
-        matches.withColumn("__rn", F.row_number().over(w))
-        .groupBy("id_a")
-        .agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.min(F.when(F.col("__rn") == 1, F.col("id_b"))).alias(
-                "best_match_id"
-            ),
-            F.min(F.when(F.col("__rn") == 1, F.col("jaccard"))).alias(
-                "best_jaccard"
-            ),
-        )
-    )
-    return (
-        batch_ids
-        .join(best.withColumnRenamed("id_a", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_matches"), F.lit(0)).alias("n_matches"),
-            "best_match_id",
-            "best_jaccard",
-            (F.coalesce(F.col("n_matches"), F.lit(0)) == 0).alias("is_novel"),
-        )
-    )
-
-
 def incremental_neardup_verdicts_indexed(
     index_art: DataFrame,
     batch_art: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     min_jaccard: float = 0.6,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
-    """``incremental_neardup_verdicts`` against a PRE-COMPUTED index:
-    both sides carry ``ingest_artifacts`` columns (``mh*``,
+    """Per-new-document ingest verdict against an existing corpus:
+    ``(id, n_matches, best_match_id, best_jaccard, is_novel)`` where a
+    match is an index document with exact shingle-Jaccard ≥
+    ``min_jaccard`` among the LSH candidates; the best match breaks
+    Jaccard ties on the smaller index id (total order → deterministic
+    across engines and partitionings). Documents too short to shingle
+    (< k words) have nothing to probe and are reported novel with
+    ``n_matches = 0`` — the conservative ingest decision (the ingest
+    sink's exact-hash probe still catches their verbatim copies).
+
+    Both sides carry ``ingest_artifacts`` columns (``mh*``,
     ``content_hash``), so the band probe reads STORED signatures instead
     of re-minhashing the corpus, and the exact-Jaccard verify
     re-shingles ONLY the candidate documents (the batch docs and the
@@ -734,19 +624,18 @@ def incremental_neardup_verdicts_indexed(
     for candidate rows only) — never a corpus-wide explode/aggregate.
 
     Contract: batch and index ids are disjoint (the ingest sink's id
-    anti-join establishes this); same output schema and values as
-    ``incremental_neardup_verdicts`` on the same documents.
+    anti-join establishes this). A replayed id with changed text would
+    otherwise be judged against its own earlier version.
 
     The candidate-pair table feeds multiple consumers (the index-side
     candidate-id projection and the verify join), so it is persisted;
     callers in long-lived sessions release it via ``scoped_caches``.
     """
     from pyspark import StorageLevel
+    from pyspark.sql import Window
 
     pairs = (
-        lsh_probe_pairs(
-            index_art, batch_art, id_col, broadcast_batch=broadcast_batch
-        )
+        lsh_probe_pairs(index_art, batch_art, id_col)
         .select(
             F.col("id_batch").alias("id_a"),
             F.col("id_index").alias("id_b"),
@@ -785,12 +674,39 @@ def incremental_neardup_verdicts_indexed(
             else F.lit(False)
         ).select(id_col, text_col)
     else:
-        if broadcast_batch:
-            cand_b = F.broadcast(cand_b)
-        index_text = index_art.join(cand_b, id_col).select(id_col, text_col)
+        index_text = index_art.join(F.broadcast(cand_b), id_col).select(
+            id_col, text_col
+        )
     verified = jaccard_verify(batch_art, pairs, text_col, id_col, index_text)
-    return _novelty_verdicts(
-        batch_art.select(F.col(id_col)), verified, id_col, min_jaccard
+    # fold the verified pairs into one row per batch document;
+    # non-candidates are novel
+    w = Window.partitionBy("id_a").orderBy(
+        F.col("jaccard").desc(), F.col("id_b").asc()
+    )
+    best = (
+        verified.filter(F.col("jaccard") >= min_jaccard)
+        .withColumn("__rn", F.row_number().over(w))
+        .groupBy("id_a")
+        .agg(
+            F.count(F.lit(1)).alias("n_matches"),
+            F.min(F.when(F.col("__rn") == 1, F.col("id_b"))).alias(
+                "best_match_id"
+            ),
+            F.min(F.when(F.col("__rn") == 1, F.col("jaccard"))).alias(
+                "best_jaccard"
+            ),
+        )
+    )
+    return (
+        batch_art.select(F.col(id_col))
+        .join(best.withColumnRenamed("id_a", id_col), id_col, "left")
+        .select(
+            id_col,
+            F.coalesce(F.col("n_matches"), F.lit(0)).alias("n_matches"),
+            "best_match_id",
+            "best_jaccard",
+            (F.coalesce(F.col("n_matches"), F.lit(0)) == 0).alias("is_novel"),
+        )
     )
 
 

@@ -233,20 +233,17 @@ WHERE hamming <= 3
 
 def incremental_neardup_probe(spark, sf_dir):
     """Incremental-ingest dedup: every 10th document plays the 'new
-    batch', the rest the existing corpus index. Batch bands broadcast
-    and probe the index — no index self-join; per new doc, the verdict
-    (match count at Jaccard ≥ 0.6, best match, novelty)."""
+    batch', the rest the existing corpus index. Both sides' ingest
+    artifacts are derived in the plan; batch bands broadcast and probe
+    the index — no index self-join; per new doc, the verdict (match
+    count at Jaccard ≥ 0.6, best match, novelty). The oracle takes the
+    MinHash min over each document's shingle multiset, which equals the
+    artifacts' min over the distinct set."""
     docs = fan_out(load(spark, sf_dir, "documents"))
-    from pyspark.sql import functions as F
-
-    return D.incremental_neardup_verdicts(
-        index_docs=docs.filter(F.col("doc_id") % 10 != 0),
-        batch_docs=docs.filter(F.col("doc_id") % 10 == 0),
+    return D.incremental_neardup_verdicts_indexed(
+        D.ingest_artifacts(docs.filter(F.col("doc_id") % 10 != 0)),
+        D.ingest_artifacts(docs.filter(F.col("doc_id") % 10 == 0)),
         min_jaccard=0.6,
-        # the two slices partition doc_id by `% 10` — disjoint by
-        # construction, so the guard's build-time scan job is skipped
-        # (the documented caller-has-proven-disjointness case)
-        check_disjoint_ids=False,
     )
 
 
@@ -314,9 +311,9 @@ def indexed_ingest_probe(spark, sf_dir):
     columns: band keys from the stored signatures (a 9-column pruned
     scan, never a corpus re-minhash), exact-Jaccard verify re-shingling
     only the band-collided candidates. Verdict values equal the
-    text-derived probe bit-for-bit (distinct-set min == multiset min),
-    so the same oracle pins the indexed path end-to-end through a real
-    parquet round-trip of the artifact table."""
+    in-plan probe's bit-for-bit, so the same oracle pins the indexed
+    path end-to-end through a real parquet round-trip of the artifact
+    table."""
     from ..core.scratch import scratch_dir
 
     docs = fan_out(load(spark, sf_dir, "documents"))

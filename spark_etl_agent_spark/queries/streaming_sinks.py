@@ -1,5 +1,5 @@
 """Driver-checkable surfaces for the two ``foreachBatch`` corpus sinks
-(``streaming.pipeline.streaming_dedup_ingest_sink`` and
+(``streaming.pipeline.streaming_dedup_ingest_sink_indexed`` and
 ``streaming_packing_sink``).
 
 Each query stages the ``documents`` table into three single-file
@@ -157,8 +157,9 @@ def streaming_ingest_dedup_audit(spark, sf_dir) -> DataFrame:
     per-batch audit envelopes ``(batch_id, n_in, n_exact_dups,
     n_dropped_vs_index, n_novel)`` — the counts a production ingest
     alerts on. The oracle unrolls the three rounds in SQL (round N's
-    probe targets the accepted union of rounds < N); verdict values
-    are identical to the unindexed sink, so the oracle is unchanged."""
+    probe targets the accepted union of rounds < N); the stored
+    signature is the min over the distinct shingle set, which equals
+    the oracle's min over the multiset."""
     from ..streaming.pipeline import (
         run_available_now,
         streaming_dedup_ingest_sink_indexed,

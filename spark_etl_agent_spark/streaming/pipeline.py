@@ -275,108 +275,6 @@ def _await_or_raise(q, timeout_s: int) -> None:
         )
 
 
-def streaming_dedup_ingest_sink(
-    index_provider: Callable[[], DataFrame],
-    novel_writer: Callable[[DataFrame, int], None],
-    audit: Optional[list] = None,
-    min_jaccard: float = 0.6,
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` body for CONTINUOUS corpus ingest with dedup:
-    each arriving micro-batch of documents is (1) exact-deduped within
-    the batch (keep min id per content hash), then (2) LSH-probed
-    against the existing corpus index (``llm.dedup.
-    incremental_neardup_verdicts`` — batch bands broadcast, the index
-    is never self-joined), and only the NOVEL documents are handed to
-    ``novel_writer``.
-
-    ``index_provider`` is called per batch so the index can grow with
-    accepted documents (an ingest loop passes a reader over the sink
-    table). ``audit`` (optional list) collects per-batch
-    ``(batch_id, n_in, n_exact_dups_in_batch, n_dropped_vs_index,
-    n_novel)`` envelopes — the counts a production ingest job alerts
-    on (``n_dropped_vs_index`` counts exact-hash AND near-dup drops
-    against the index).
-
-    Scale: everything inside is the batch-vs-index probe shape — cost
-    per micro-batch is one index scan + batch-sized work, independent
-    of history size beyond the scan.
-    """
-    from ..core.cache import scoped_caches
-    from ..llm.dedup import incremental_neardup_verdicts
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        with scoped_caches(batch_df.sparkSession):
-            _ingest_batch(batch_df, batch_id)
-
-    def _ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint()  # stream source read once
-        n_in = batch_df.count()
-        if n_in == 0:
-            if audit is not None:
-                audit.append((batch_id, 0, 0, 0, 0))
-            return
-        # within-batch exact dedup (streams can replay the same doc)
-        w_hash = F.md5(F.col("text"))
-        keeper = (
-            batch_df.withColumn("__h", w_hash)
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy("__h").orderBy("doc_id")
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__h", "__rn")
-        )
-        n_exact = keeper.count()
-        index_df = index_provider()
-        if index_df is None or not index_df.columns:
-            novel = keeper
-        else:
-            # exact-hash probe FIRST: the LSH probe cannot see documents
-            # too short to shingle (< k words — all-NULL signatures), so
-            # without this anti-join a short doc would be re-accepted
-            # verbatim every batch. One index projection, same single
-            # index scan the LSH probe already pays.
-            keeper = keeper.join(
-                index_df.select(F.md5(F.col("text")).alias("__ih")),
-                F.md5(F.col("text")) == F.col("__ih"),
-                "left_anti",
-            )
-            # id probe SECOND: an at-least-once replay can re-deliver an
-            # already-ingested id with CHANGED text, which the hash
-            # anti-join passes; it is not novel (the id is taken) and it
-            # must not reach the LSH probe, whose verdicts assume
-            # batch/index ids are disjoint. Same single index scan,
-            # one id-column projection.
-            keeper = keeper.join(index_df.select("doc_id"), "doc_id", "left_anti")
-            verdicts = incremental_neardup_verdicts(
-                index_df,
-                keeper,
-                min_jaccard=min_jaccard,
-                # disjointness proven by the id anti-join just above —
-                # skip the guard's extra index scan
-                check_disjoint_ids=False,
-            ).select("doc_id", "is_novel")
-            novel = keeper.join(verdicts, "doc_id").filter(
-                F.col("is_novel")
-            ).drop("is_novel")
-        novel = novel.localCheckpoint()  # verdict computed once
-        n_novel = novel.count()
-        novel_writer(novel, batch_id)
-        # this batch's localCheckpoints (and any persist inside the
-        # probe) are batch-scoped; the scoped_caches wrapper
-        # in ingest_batch releases exactly those — NOT a session-global
-        # clearCache, which would evict caches owned by unrelated
-        # concurrent jobs and misses RDD-level checkpoint storage
-        if audit is not None:
-            audit.append(
-                (batch_id, n_in, n_in - n_exact, n_exact - n_novel, n_novel)
-            )
-
-    return ingest_batch
-
-
 def streaming_dedup_ingest_sink_indexed(
     index_provider: Callable[[], DataFrame],
     novel_writer: Callable[[DataFrame, int], None],
@@ -384,23 +282,33 @@ def streaming_dedup_ingest_sink_indexed(
     min_jaccard: float = 0.6,
     maintenance: Optional[Callable[[int], None]] = None,
 ) -> Callable[[DataFrame, int], None]:
-    """Indexed variant of ``streaming_dedup_ingest_sink``: the sink
-    persists each accepted document's dedup artifacts (content hash,
-    MinHash signature, shingle count — ``llm.dedup.ingest_artifacts``)
-    alongside the document, so a micro-batch probes the STORED index
-    instead of re-tokenizing and re-minhashing the whole accepted corpus
-    per trigger. At 100 TB this is the production posture: signatures
-    are computed once at ingest; per batch the index pays a pruned
-    column scan (hash for the exact probe, 8 signature columns for the
-    band probe, text only for the few band-collided candidate rows) —
-    never a corpus-wide explode/aggregate.
+    """``foreachBatch`` body for CONTINUOUS corpus ingest with dedup:
+    each arriving micro-batch of documents is (1) exact-deduped within
+    the batch (keep min id per content hash), then (2) probed against
+    the accepted corpus — exact content hash, then id, then LSH bands
+    (``llm.dedup.incremental_neardup_verdicts_indexed`` — batch bands
+    broadcast, the index is never self-joined) — and only the NOVEL
+    documents are handed to ``novel_writer``.
 
-    ``index_provider`` returns the accepted ARTIFACT table (or None when
-    empty); ``novel_writer`` receives the artifact-extended accepted
-    frame — append it as-is and the artifacts persist with the corpus.
-    Audit envelope semantics and verdict values are identical to the
-    unindexed sink (same signatures, same probe, same exact-Jaccard
-    verify).
+    The sink persists each accepted document's dedup artifacts (content
+    hash, MinHash signature, shingle count —
+    ``llm.dedup.ingest_artifacts``) alongside the document, so a
+    micro-batch probes the STORED index instead of re-tokenizing and
+    re-minhashing the whole accepted corpus per trigger. Per batch the
+    index pays a pruned column scan (hash for the exact probe, 8
+    signature columns for the band probe, text only for the few
+    band-collided candidate rows) — never a corpus-wide
+    explode/aggregate.
+
+    ``index_provider`` is called per batch and returns the accepted
+    ARTIFACT table (or None when empty), so the index grows with
+    accepted documents; ``novel_writer`` receives the artifact-extended
+    accepted frame — append it as-is and the artifacts persist with the
+    corpus. ``audit`` (optional list) collects per-batch ``(batch_id,
+    n_in, n_exact_dups_in_batch, n_dropped_vs_index, n_novel)``
+    envelopes — the counts a production ingest job alerts on
+    (``n_dropped_vs_index`` counts exact-hash, id-replay AND near-dup
+    drops against the index).
     """
     from ..core.cache import scoped_caches
     from ..llm.dedup import (
@@ -458,16 +366,20 @@ def streaming_dedup_ingest_sink_indexed(
         if index_df is None or not index_df.columns:
             novel = keeper
         else:
-            # exact-hash probe against the STORED hash column (the
-            # unindexed sink recomputes md5 over the index text here)
+            # exact-hash probe FIRST: the LSH probe cannot see documents
+            # too short to shingle (< k words — all-NULL signatures), so
+            # without this anti-join a short doc would be re-accepted
+            # verbatim every batch. Reads the STORED hash column.
             keeper = keeper.join(
                 index_df.select(F.col("content_hash").alias("__ih")),
                 F.col("content_hash") == F.col("__ih"),
                 "left_anti",
             )
-            # id probe second (replayed id with changed text is not
-            # novel and must not reach the LSH probe — see the
-            # unindexed sink)
+            # id probe SECOND: an at-least-once replay can re-deliver an
+            # already-ingested id with CHANGED text, which the hash
+            # anti-join passes; it is not novel (the id is taken) and it
+            # must not reach the LSH probe, whose verdicts assume
+            # batch/index ids are disjoint
             keeper = keeper.join(index_df.select("doc_id"), "doc_id", "left_anti")
             verdicts = incremental_neardup_verdicts_indexed(
                 index_df, keeper, min_jaccard=min_jaccard

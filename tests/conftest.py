@@ -26,6 +26,20 @@ def spark():
     manager.stop()
 
 
+@pytest.fixture()
+def pinned_rdds(spark):
+    """Hold a strong reference to every RDD persisted when the test
+    starts, for the length of the test. The session's persistent-RDD
+    registry keeps its values weakly, so a persisted RDD that an earlier
+    test left unreferenced (an operator's ``localCheckpoint``) leaves it
+    at whichever JVM GC follows; a test that compares the registry
+    before and after a block would then see a change the block did not
+    make. Pinned, only the code under test changes the registry."""
+    pinned = spark.sparkContext._jsc.getPersistentRDDs()
+    yield
+    del pinned
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

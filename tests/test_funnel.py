@@ -106,7 +106,7 @@ def test_default_flags_include_full_battery():
     assert "ok_stopwords" in GOPHER_FLAGS and len(GOPHER_FLAGS) == 7
 
 
-def test_funnel_persists_release_under_scoped_caches(spark):
+def test_funnel_persists_release_under_scoped_caches(spark, pinned_rdds):
     """The funnel persists three stage frames per invocation; in a
     long-lived session (the 175-query bench, a foreachBatch loop) they
     must be released by the scoped_caches consumption contract —
@@ -164,7 +164,9 @@ def test_repetition_gate_matches_standalone_battery(spark):
     assert {1, 3} <= expected
 
 
-def test_folded_stage1_reads_persisted_battery_not_corpus(spark, sf_dir):
+def test_folded_stage1_reads_persisted_battery_not_corpus(
+    spark, sf_dir, pinned_rdds
+):
     """One-corpus-scan contract for the folded stage 1: the repetition
     branch must hang off the PERSISTED flag-gated survivor frame (5
     persisted frames total: s1_flags + s1 + s2 + the shared shingle

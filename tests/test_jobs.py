@@ -586,7 +586,9 @@ def test_quality_gate_repetition_opt_in(spark):
         assert 2 not in gated  # ...but not the repetition bound
 
 
-def test_corpus_prep_etl_end_to_end(spark, sf_dir, job_service, warehouse):
+def test_corpus_prep_etl_end_to_end(
+    spark, sf_dir, job_service, warehouse, pinned_rdds
+):
     """The corpus-assembly job: decontaminate → mixture resample →
     deterministic shuffle → sequence packing → manifest write, audits
     observed (no dedicated count scans). Envelope invariants: the
@@ -604,17 +606,22 @@ def test_corpus_prep_etl_end_to_end(spark, sf_dir, job_service, warehouse):
         mode="overwrite",
     )
 
-    from spark_etl_agent_spark.core.cache import _persistent_rdd_ids
+    from spark_etl_agent_spark.core.cache import (
+        _cached_entries,
+        _persistent_rdd_ids,
+    )
 
     before = _persistent_rdd_ids(spark)
+    n_cached = len(_cached_entries(spark))
     result = job_service.execute_job(
         {"id": "p1", "name": "prep", "type": "corpus_prep_etl",
          "load_date": "2026-08-14"}
     )
     assert result["status"] == "Success", result.get("error")
     assert result["environment"] == "Corpus"
-    # the run releases every persist it made
+    # the run releases every persist it made, and its plans
     assert _persistent_rdd_ids(spark) == before
+    assert len(_cached_entries(spark)) == n_cached
     n_in = result["n_input"]
     assert n_in == docs.count()
     # the benchmark docs themselves are verbatim in the corpus ->
@@ -734,7 +741,9 @@ def test_read_resilient_skips_corrupt_file(spark, tmp_path):
     ) or "footer" in str(exc.value).lower()
 
 
-def test_corpus_prep_raises_on_absent_target_domain(spark, tmp_path):
+def test_corpus_prep_raises_on_absent_target_domain(
+    spark, tmp_path, pinned_rdds
+):
     """A configured mixture domain with no corpus rows must fail the
     job loudly — proceeding would silently ship a corpus whose
     composition diverges from the configured mixture."""

@@ -483,29 +483,40 @@ def test_bpe_train_matches_pure_python_reference(spark):
     ]
 
 
-def test_scoped_caches_releases_only_block_created_storage(spark):
+def test_scoped_caches_releases_only_block_created_storage(spark, pinned_rdds):
     """scoped_caches must release persists AND localCheckpoints created
-    inside the block while leaving pre-existing caches untouched — the
-    contract the streaming ingest sink's per-batch cleanup relies on."""
+    inside the block — their RDDs and their CacheManager entries — while
+    leaving pre-existing caches untouched: the contract the streaming
+    ingest sink's per-batch cleanup relies on."""
     from pyspark import StorageLevel
 
     from spark_etl_agent_spark.core.cache import (
+        _cached_entries,
         _persistent_rdd_ids,
         scoped_caches,
     )
 
+    def outer_registered():
+        plan = outer._jdf.queryExecution().executedPlan().toString()
+        return "InMemoryTableScan" in plan
+
     outer = spark.range(10).persist(StorageLevel.MEMORY_AND_DISK)
     outer.count()
     base_ids = _persistent_rdd_ids(spark)
+    n_cached = len(_cached_entries(spark))
     try:
         with scoped_caches(spark):
             inner = spark.range(20).persist(StorageLevel.MEMORY_AND_DISK)
             inner.count()
+            derived = inner.selectExpr("id * 2 AS x").cache()
+            derived.count()
             ck = spark.range(5).localCheckpoint()
             ck.count()
-            assert len(_persistent_rdd_ids(spark)) >= len(base_ids) + 2
+            assert len(_persistent_rdd_ids(spark)) >= len(base_ids) + 3
+            assert len(_cached_entries(spark)) == n_cached + 2
         assert _persistent_rdd_ids(spark) == base_ids
-        assert outer.storageLevel.useMemory
+        assert len(_cached_entries(spark)) == n_cached
+        assert outer.storageLevel.useMemory and outer_registered()
         assert outer.count() == 10
     finally:
         outer.unpersist()
@@ -898,7 +909,7 @@ def test_shingles_of_matches_python_reference(spark):
     assert "split(" not in body.split(" ELSE ")[0]
 
 
-def test_jaccard_verify_adds_no_explode_or_persist(spark, sf_dir):
+def test_jaccard_verify_adds_no_explode_or_persist(spark, sf_dir, pinned_rdds):
     """The verify works on one shingle array per document: its optimized
     plan holds no Generate beyond those of its candidate-pair input, and
     running it leaves no persisted RDD behind (an exploded, persisted

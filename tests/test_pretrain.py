@@ -222,7 +222,10 @@ def test_resample_epochs_is_partitioning_independent(spark):
 
 
 def test_incremental_probe_planted_neardup(spark):
-    from spark_etl_agent_spark.llm.dedup import incremental_neardup_verdicts
+    from spark_etl_agent_spark.llm.dedup import (
+        incremental_neardup_verdicts_indexed,
+        ingest_artifacts,
+    )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     index = spark.createDataFrame(
@@ -239,7 +242,9 @@ def test_incremental_probe_planted_neardup(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in incremental_neardup_verdicts(index, batch, min_jaccard=0.5).collect()
+        for r in incremental_neardup_verdicts_indexed(
+            ingest_artifacts(index), ingest_artifacts(batch), min_jaccard=0.5
+        ).collect()
     }
     assert len(out) == 3  # every batch doc gets a verdict row
     assert out[100]["is_novel"] is False and out[100]["best_match_id"] == 1
@@ -262,39 +267,22 @@ def test_incremental_probe_broadcasts_batch_not_index(spark, sf_dir):
 
 
 def test_incremental_probe_best_match_tie_breaks_on_min_id(spark):
-    from spark_etl_agent_spark.llm.dedup import incremental_neardup_verdicts
+    from spark_etl_agent_spark.llm.dedup import (
+        incremental_neardup_verdicts_indexed,
+        ingest_artifacts,
+    )
 
     dup = "one two three four five six seven eight nine ten"
     index = spark.createDataFrame(
         [(5, dup), (3, dup)], ["doc_id", "text"]
     )
     batch = spark.createDataFrame([(100, dup)], ["doc_id", "text"])
-    row = incremental_neardup_verdicts(index, batch, min_jaccard=0.9).collect()[0]
+    row = incremental_neardup_verdicts_indexed(
+        ingest_artifacts(index), ingest_artifacts(batch), min_jaccard=0.9
+    ).collect()[0]
     assert row["n_matches"] == 2
     assert row["best_match_id"] == 3  # jaccard tie -> smaller index id
     assert row["best_jaccard"] == 1.0
-
-
-def test_incremental_probe_raises_on_id_collision(spark):
-    """Batch and index ids must be disjoint; a replayed id with changed
-    text must fail loudly instead of being accepted as a second
-    document under a taken id."""
-    from spark_etl_agent_spark.llm.dedup import incremental_neardup_verdicts
-
-    base = "one two three four five six seven eight nine ten"
-    index = spark.createDataFrame([(1, base)], ["doc_id", "text"])
-    batch = spark.createDataFrame(
-        [(1, "entirely different replacement text for document one here")],
-        ["doc_id", "text"],
-    )
-    with pytest.raises(ValueError, match="BOTH the batch and the index"):
-        incremental_neardup_verdicts(index, batch)
-    # a caller that has proven disjointness (or accepts a re-used id) can
-    # skip the guard and still get a row per batch doc
-    out = incremental_neardup_verdicts(
-        index, batch, check_disjoint_ids=False
-    )
-    assert out.count() == 1
 
 
 def test_simhash_hot_bucket_guard(spark):
@@ -429,32 +417,6 @@ def test_label_medoids_tie_breaks_on_min_id(spark):
     assert label_medoids(df).collect()[0]["medoid_id"] == 3
 
 
-def test_incremental_probe_large_batch_path_equals_broadcast(spark):
-    """broadcast_batch=False (backfill-sized batches): identical
-    verdicts through the shuffle-join plan."""
-    from spark_etl_agent_spark.llm.dedup import incremental_neardup_verdicts
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    index = spark.createDataFrame(
-        [(1, base), (2, "totally different words here about nothing shared")],
-        ["doc_id", "text"],
-    )
-    batch = spark.createDataFrame(
-        [(100, base + " lambda"), (101, "novel content unseen anywhere else")],
-        ["doc_id", "text"],
-    )
-    kw = dict(min_jaccard=0.5)
-    a = sorted(
-        tuple(r) for r in incremental_neardup_verdicts(
-            index, batch, broadcast_batch=True, **kw).collect()
-    )
-    b = sorted(
-        tuple(r) for r in incremental_neardup_verdicts(
-            index, batch, broadcast_batch=False, **kw).collect()
-    )
-    assert a == b and len(a) == 2
-
-
 def test_ingest_artifacts_signatures_match_minhash_signatures(spark):
     """The ingest-time artifact signature (min over the DISTINCT shingle
     set, explode/agg shape) equals ``minhash_signatures`` (multiset),
@@ -490,10 +452,10 @@ def test_ingest_artifacts_signatures_match_minhash_signatures(spark):
 
 def test_indexed_verdicts_match_unindexed(spark):
     """``incremental_neardup_verdicts_indexed`` over precomputed
-    artifacts returns the exact rows of the text-derived verdicts —
-    matches, best-match ties, novel non-candidates, short docs."""
+    artifacts returns the exact rows the text-derived verdicts (the
+    unindexed shape this path replaced) returned — two matches with the
+    best one chosen by Jaccard, a novel non-candidate, a short doc."""
     from spark_etl_agent_spark.llm.dedup import (
-        incremental_neardup_verdicts,
         incremental_neardup_verdicts_indexed,
         ingest_artifacts,
     )
@@ -515,19 +477,18 @@ def test_indexed_verdicts_match_unindexed(spark):
         ],
         ["doc_id", "text"],
     )
-    want = sorted(
-        tuple(r)
-        for r in incremental_neardup_verdicts(
-            index, batch, min_jaccard=0.5
-        ).collect()
-    )
     got = sorted(
         tuple(r)
         for r in incremental_neardup_verdicts_indexed(
             ingest_artifacts(index), ingest_artifacts(batch), min_jaccard=0.5
         ).collect()
     )
-    assert got == want and len(got) == 3
+    # 100 shares 8 of 9 shingles with 1 (8/9) and 8 of 10 with 3 (0.8)
+    assert got == [
+        (100, 2, 1, 8 / 9, False),
+        (101, 0, None, None, True),
+        (102, 0, None, None, True),
+    ]
 
 
 def test_simhash_near_pairs_planted_and_lossless_contract(spark):

@@ -27,6 +27,26 @@ def canon(df, cols):
     return sorted(tuple(str(v) for v in row) for row in df.select(*cols).collect())
 
 
+def stage_micro_batches(spark, src, batches, schema, first=0):
+    """Write each batch of rows as one parquet file ``f{i}.parquet`` in
+    ``src`` with mtimes 1000 s apart, so a ``maxFilesPerTrigger=1`` file
+    stream reads them as one micro-batch each, in order. ``first``
+    numbers a later arrival after files already staged."""
+    import os
+    import shutil
+
+    src.mkdir(exist_ok=True)
+    for i, rows in enumerate(batches, first):
+        stage = src.parent / f"{src.name}_stage{i}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(stage))
+        dst = src / f"f{i}.parquet"
+        shutil.copy(next(stage.glob("*.parquet")), dst)
+        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
+    return src
+
+
 def test_tumbling_equals_batch(spark, sf_dir, batch_events):
     streamed = run_available_now(
         tumbling_window_counts(events_stream(spark, sf_dir)), output_mode="complete"
@@ -300,8 +320,6 @@ def test_watermark_advances_and_evicts_state_across_micro_batches(
     behind the watermark, and EVICT finalized windows from the state
     store — the behavior class AvailableNow-single-batch runs never
     exercise."""
-    import os
-    import shutil
     from datetime import datetime
 
     def ts(h, m=0):
@@ -326,16 +344,9 @@ def test_watermark_advances_and_evicts_state_across_micro_batches(
         [(7, ts(10, 15)), (8, ts(11, 15)), (9, ts(20, 0))],
         [(10, ts(23, 0))],
     ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, "event_id long, ts timestamp").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(stage))
-        dst = src / f"f{i}.parquet"
-        shutil.copy(next(stage.glob("*.parquet")), dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
+    src = stage_micro_batches(
+        spark, tmp_path / "src", batches, "event_id long, ts timestamp"
+    )
 
     schema = spark.read.parquet(str(src)).schema
     stream = (
@@ -389,44 +400,13 @@ def test_watermark_advances_and_evicts_state_across_micro_batches(
     assert final_state <= 1
 
 
-def test_streaming_dedup_ingest_accepts_only_novel(spark, tmp_path):
-    """Continuous corpus ingest: per micro-batch, within-batch exact
-    dedup then LSH probe against the GROWING accepted-corpus index;
-    only novel docs land in the sink. Three rate-limited micro-batches
-    exercise: empty index bootstrap, cross-batch exact dup, cross-batch
-    near-dup, within-batch exact dup."""
-    import os
-    import shutil
-
+def _run_ingest_stream(spark, src, sink, audit):
+    """Drive the ingest sink over the staged micro-batches in ``src``,
+    appending accepted documents (with their artifacts) to ``sink``."""
     from spark_etl_agent_spark.streaming.pipeline import (
         run_available_now,
-        streaming_dedup_ingest_sink,
+        streaming_dedup_ingest_sink_indexed,
     )
-
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    other = "completely different subject matter covering spark shuffles and joins"
-    third = "yet another unrelated document about parquet footers and statistics"
-    batches = [
-        [(1, base), (2, other)],                       # both novel (empty index)
-        [(3, base),                                    # exact dup of 1 -> drop
-         (4, other + " tomorrow"),                     # near-dup of 2 -> drop
-         (5, third)],                                  # novel
-        [(6, "fresh content with entirely new words"),
-         (7, "fresh content with entirely new words"),  # within-batch dup of 6
-         (8, third + " appendix")],                    # near-dup of 5 -> drop
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(stage))
-        dst = src / f"f{i}.parquet"
-        shutil.copy(next(stage.glob("*.parquet")), dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-
-    sink = tmp_path / "accepted"
 
     def index_provider():
         if not sink.exists() or not any(sink.glob("*.parquet")):
@@ -436,7 +416,6 @@ def test_streaming_dedup_ingest_accepts_only_novel(spark, tmp_path):
     def novel_writer(df, batch_id):
         df.coalesce(1).write.mode("append").parquet(str(sink))
 
-    audit: list = []
     schema = spark.read.parquet(str(src)).schema
     stream = (
         spark.readStream.schema(schema)
@@ -446,37 +425,59 @@ def test_streaming_dedup_ingest_accepts_only_novel(spark, tmp_path):
     run_available_now(
         stream,
         output_mode="append",
-        foreach_batch=streaming_dedup_ingest_sink(
+        foreach_batch=streaming_dedup_ingest_sink_indexed(
             index_provider, novel_writer, audit=audit, min_jaccard=0.6
         ),
     )
 
-    accepted = sorted(
-        r["doc_id"] for r in spark.read.parquet(str(sink)).collect()
+
+def test_streaming_dedup_ingest_accepts_only_novel(spark, tmp_path):
+    """Continuous corpus ingest: per micro-batch, within-batch exact
+    dedup, then exact-hash, id and LSH probes against the GROWING
+    accepted-corpus index; only novel docs land in the sink. Three
+    rate-limited micro-batches exercise: empty index bootstrap,
+    cross-batch exact dup, cross-batch near-dup, within-batch exact
+    dup."""
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    other = "completely different subject matter covering spark shuffles and joins"
+    third = "yet another unrelated document about parquet footers and statistics"
+    fresh = "fresh content with entirely new words"
+    batches = [
+        [(1, base), (2, other)],                       # both novel (empty index)
+        [(3, base),                                    # exact dup of 1 -> drop
+         (4, other + " tomorrow"),                     # near-dup of 2 -> drop
+         (5, third)],                                  # novel
+        [(6, fresh),
+         (7, fresh),                                   # within-batch dup of 6
+         (8, third + " appendix")],                    # near-dup of 5 -> drop
+    ]
+    src = stage_micro_batches(
+        spark, tmp_path / "src", batches, "doc_id long, text string"
     )
-    assert accepted == [1, 2, 5, 6]
-    # audit envelopes: (batch_id, n_in, n_exact_dups, n_near_dups, n_novel)
-    by_counts = [(a[1], a[2], a[3], a[4]) for a in sorted(audit)]
-    assert by_counts == [(2, 0, 0, 2), (3, 0, 2, 1), (3, 1, 1, 1)]
+    sink = tmp_path / "accepted"
+    audit: list = []
+    _run_ingest_stream(spark, src, sink, audit)
+
+    accepted = spark.read.parquet(str(sink)).collect()
+    assert sorted((r["doc_id"], r["text"]) for r in accepted) == [
+        (1, base), (2, other), (5, third), (6, fresh),
+    ]
+    # audit envelopes: (batch_id, n_in, n_exact_dups_in_batch,
+    # n_dropped_vs_index, n_novel)
+    assert sorted(audit) == [
+        (0, 2, 0, 0, 2), (1, 3, 0, 2, 1), (2, 3, 1, 1, 1),
+    ]
 
 
 def test_indexed_ingest_sink_matches_unindexed(spark, tmp_path):
-    """The indexed sink (stored content hash + MinHash signature, probe
+    """The ingest sink (stored content hash + MinHash signature, probe
     against artifact columns, candidate-only re-shingling) accepts the
-    SAME documents and emits the SAME audit envelopes as the unindexed
-    sink on an identical batch sequence — including within-batch dups,
-    cross-batch exact/near dups, a short (< k words) doc, and an
-    id-replay with changed text. The accepted table carries the
-    artifacts so no consumer ever re-derives them."""
-    import os
-    import shutil
-
-    from spark_etl_agent_spark.streaming.pipeline import (
-        run_available_now,
-        streaming_dedup_ingest_sink,
-        streaming_dedup_ingest_sink_indexed,
-    )
-
+    documents and emits the audit envelopes that a sink re-shingling
+    and re-minhashing the whole accepted corpus per batch produced on
+    this batch sequence (the literals below) — including within-batch
+    dups, cross-batch exact/near dups, a short (< k words) doc, and an
+    id replay with changed text. The accepted table carries the
+    artifacts, so no consumer ever re-derives them."""
     base = "the quick brown fox jumps over the lazy dog again and again today"
     other = "completely different subject matter covering spark shuffles and joins"
     batches = [
@@ -488,61 +489,23 @@ def test_indexed_ingest_sink_matches_unindexed(spark, tmp_path):
          (7, "fresh content with entirely new words")],  # within-batch dup
         [(8, "tiny doc")],                             # exact dup of short 3
     ]
-
-    def stage(srcdir):
-        srcdir.mkdir()
-        for i, rows in enumerate(batches):
-            st = srcdir.parent / f"{srcdir.name}_stage{i}"
-            spark.createDataFrame(
-                rows, "doc_id long, text string"
-            ).coalesce(1).write.mode("overwrite").parquet(str(st))
-            dst = srcdir / f"f{i}.parquet"
-            shutil.copy(next(st.glob("*.parquet")), dst)
-            os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-        return srcdir
-
-    def run(sink_factory, src, sink):
-        def index_provider():
-            if not sink.exists() or not any(sink.glob("*.parquet")):
-                return None
-            return spark.read.parquet(str(sink))
-
-        def novel_writer(df, batch_id):
-            df.coalesce(1).write.mode("append").parquet(str(sink))
-
-        audit: list = []
-        schema = spark.read.parquet(str(src)).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        run_available_now(
-            stream,
-            output_mode="append",
-            foreach_batch=sink_factory(
-                index_provider, novel_writer, audit=audit, min_jaccard=0.6
-            ),
-        )
-        return sorted(audit), sorted(
-            r["doc_id"] for r in spark.read.parquet(str(sink)).collect()
-        )
-
-    audit_old, ids_old = run(
-        streaming_dedup_ingest_sink, stage(tmp_path / "src_a"),
-        tmp_path / "acc_a",
+    src = stage_micro_batches(
+        spark, tmp_path / "src", batches, "doc_id long, text string"
     )
-    audit_new, ids_new = run(
-        streaming_dedup_ingest_sink_indexed, stage(tmp_path / "src_b"),
-        tmp_path / "acc_b",
-    )
-    assert audit_new == audit_old
-    assert ids_new == ids_old == [1, 2, 3, 6]
+    sink = tmp_path / "accepted"
+    audit: list = []
+    _run_ingest_stream(spark, src, sink, audit)
+
+    idx = spark.read.parquet(str(sink))
+    assert sorted(r["doc_id"] for r in idx.collect()) == [1, 2, 3, 6]
+    assert sorted(audit) == [
+        (0, 3, 0, 0, 3), (1, 5, 1, 3, 1), (2, 1, 0, 1, 0),
+    ]
     # the accepted table IS the index: artifacts stored with the corpus
-    idx = spark.read.parquet(str(tmp_path / "acc_b"))
     assert {"content_hash", "n_shingles"}.issubset(set(idx.columns))
     assert all(f"mh{i}" in idx.columns for i in range(8))
     short = idx.filter("doc_id = 3").first()
+    assert short["text"] == "tiny doc"
     assert short["n_shingles"] == 0 and short["mh0"] is None
 
 
@@ -555,15 +518,9 @@ def test_ingest_sink_drops_replayed_id_and_spares_foreign_caches(
     re-accepted); (2) the sink's
     per-batch cache cleanup releases only its own persists/checkpoints,
     not caches owned by unrelated concurrent work in the session."""
-    import os
-    import shutil
-
     from pyspark import StorageLevel
 
-    from spark_etl_agent_spark.streaming.pipeline import (
-        run_available_now,
-        streaming_dedup_ingest_sink,
-    )
+    from spark_etl_agent_spark.core.cache import _cached_entries
 
     batches = [
         [(1, "the quick brown fox jumps over the lazy dog again today")],
@@ -571,44 +528,17 @@ def test_ingest_sink_drops_replayed_id_and_spares_foreign_caches(
         # anti-join, must still be dropped as an id replay
         [(1, "entirely new replacement words that resemble nothing prior")],
     ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(stage))
-        dst = src / f"f{i}.parquet"
-        shutil.copy(next(stage.glob("*.parquet")), dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-
+    src = stage_micro_batches(
+        spark, tmp_path / "src", batches, "doc_id long, text string"
+    )
     sink = tmp_path / "accepted"
-
-    def index_provider():
-        if not sink.exists() or not any(sink.glob("*.parquet")):
-            return None
-        return spark.read.parquet(str(sink))
-
-    def novel_writer(df, batch_id):
-        df.coalesce(1).write.mode("append").parquet(str(sink))
 
     foreign = spark.range(100).persist(StorageLevel.MEMORY_AND_DISK)
     foreign.count()
+    n_cached = len(_cached_entries(spark))
     audit: list = []
-    schema = spark.read.parquet(str(src)).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
     try:
-        run_available_now(
-            stream,
-            output_mode="append",
-            foreach_batch=streaming_dedup_ingest_sink(
-                index_provider, novel_writer, audit=audit
-            ),
-        )
+        _run_ingest_stream(spark, src, sink, audit)
         rows = spark.read.parquet(str(sink)).collect()
         assert [r["doc_id"] for r in rows] == [1]
         assert "quick brown fox" in rows[0]["text"]  # original kept
@@ -617,6 +547,7 @@ def test_ingest_sink_drops_replayed_id_and_spares_foreign_caches(
         assert by_counts == [(1, 0, 0, 1), (1, 0, 1, 0)]
         # the foreign cache survived every per-batch cleanup
         assert foreign.storageLevel.useMemory
+        assert len(_cached_entries(spark)) == n_cached
     finally:
         foreign.unpersist()
 
@@ -626,9 +557,6 @@ def test_streaming_packing_spans_continue_across_batches(spark, tmp_path):
     gap-free global token stream — spans continue across batch
     boundaries, chunk ids are global, and a replayed batch id is
     skipped (effectively-once)."""
-    import os
-    import shutil
-
     from spark_etl_agent_spark.streaming.pipeline import (
         run_available_now,
         streaming_packing_sink,
@@ -639,16 +567,9 @@ def test_streaming_packing_spans_continue_across_batches(spark, tmp_path):
         [(3, 9), (4, 9)],      # cum 30
         [(5, 5)],              # cum 35
     ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, "doc_id long, n_tokens long").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(stage))
-        dst = src / f"f{i}.parquet"
-        shutil.copy(next(stage.glob("*.parquet")), dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
+    src = stage_micro_batches(
+        spark, tmp_path / "src", batches, "doc_id long, n_tokens long"
+    )
 
     manifest_dir = tmp_path / "manifest"
     state_dir = tmp_path / "state"
@@ -695,11 +616,17 @@ def test_streaming_packing_spans_continue_across_batches(spark, tmp_path):
     assert spark.read.parquet(str(manifest_dir / "batch=*")).count() == 5
 
 
-def test_streaming_packing_sink_releases_batch_caches(spark, tmp_path):
+def test_streaming_packing_sink_releases_batch_caches(
+    spark, tmp_path, pinned_rdds
+):
     """Each packing batch releases the storage it takes (the batch
     checkpoint and the packing's ranged frame), so a long-running
-    stream does not accumulate one set of persisted RDDs per batch."""
-    from spark_etl_agent_spark.core.cache import _persistent_rdd_ids
+    stream accumulates neither persisted RDDs nor CacheManager entries
+    per batch."""
+    from spark_etl_agent_spark.core.cache import (
+        _cached_entries,
+        _persistent_rdd_ids,
+    )
     from spark_etl_agent_spark.streaming.pipeline import streaming_packing_sink
 
     spans: list = []
@@ -711,12 +638,60 @@ def test_streaming_packing_sink_releases_batch_caches(spark, tmp_path):
 
     sink = streaming_packing_sink(str(tmp_path / "state"), writer, budget=10)
     schema = "doc_id long, n_tokens long"
-    before = _persistent_rdd_ids(spark)
+    before, n_cached = _persistent_rdd_ids(spark), len(_cached_entries(spark))
     sink(spark.createDataFrame([(1, 4), (2, 8)], schema), 0)
     assert _persistent_rdd_ids(spark) == before
+    assert len(_cached_entries(spark)) == n_cached
     sink(spark.createDataFrame([(3, 9)], schema), 1)
     assert _persistent_rdd_ids(spark) == before
+    assert len(_cached_entries(spark)) == n_cached
     assert spans == [[(1, 0, 4), (2, 4, 12)], [(3, 12, 21)]]
+
+
+def test_ingest_sink_releases_batch_caches(spark, tmp_path, pinned_rdds):
+    """Each ingest batch releases the storage it takes (the artifact
+    checkpoint and the probe's persisted candidate pairs) from both
+    registries, so a long-running stream accumulates neither persisted
+    RDDs nor CacheManager entries per batch — also once the index is
+    non-empty and the LSH probe runs."""
+    from spark_etl_agent_spark.core.cache import (
+        _cached_entries,
+        _persistent_rdd_ids,
+    )
+    from spark_etl_agent_spark.streaming.pipeline import (
+        streaming_dedup_ingest_sink_indexed,
+    )
+
+    sink_dir = tmp_path / "accepted"
+
+    def index_provider():
+        if not sink_dir.exists():
+            return None
+        return spark.read.parquet(str(sink_dir))
+
+    def writer(df, batch_id):
+        df.coalesce(1).write.mode("append").parquet(str(sink_dir))
+
+    audit: list = []
+    sink = streaming_dedup_ingest_sink_indexed(
+        index_provider, writer, audit=audit
+    )
+    schema = "doc_id long, text string"
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    rdds, n_cached = _persistent_rdd_ids(spark), len(_cached_entries(spark))
+    sink(spark.createDataFrame([(1, base), (2, "hi there")], schema), 0)
+    assert _persistent_rdd_ids(spark) == rdds
+    assert len(_cached_entries(spark)) == n_cached
+    sink(
+        spark.createDataFrame(
+            [(3, base + " tomorrow"), (4, "parquet footers hold statistics")],
+            schema,
+        ),
+        1,
+    )
+    assert _persistent_rdd_ids(spark) == rdds
+    assert len(_cached_entries(spark)) == n_cached
+    assert audit == [(0, 2, 0, 0, 2), (1, 2, 0, 1, 1)]
 
 
 def test_events_stream_reads_directory_layout(spark, sf_dir, tmp_path, batch_events):
@@ -753,9 +728,6 @@ def test_kill_and_resume_packing_sink_exactly_once(spark, tmp_path):
     SAME batch id; the sink recomputes identical spans from the
     unadvanced offset state and the idempotent writer overwrites its
     own partition, so the union manifest is exactly-once and gap-free."""
-    import os
-    import shutil
-
     from pyspark.errors import StreamingQueryException
 
     from spark_etl_agent_spark.streaming.pipeline import (
@@ -766,15 +738,8 @@ def test_kill_and_resume_packing_sink_exactly_once(spark, tmp_path):
         [(1, 4), (2, 8)],      # cum 12
         [(3, 9), (4, 9)],      # cum 30
     ]
-    src = tmp_path / "src"
-    src.mkdir()
-    stage0 = tmp_path / "stage0"
-    spark.createDataFrame(batches[0], "doc_id long, n_tokens long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(stage0))
-    f0 = src / "f0.parquet"
-    shutil.copy(next(stage0.glob("*.parquet")), f0)
-    os.utime(f0, (1_000_000, 1_000_000))
+    schema = "doc_id long, n_tokens long"
+    src = stage_micro_batches(spark, tmp_path / "src", batches[:1], schema)
 
     manifest_dir = tmp_path / "manifest"
     state_dir = tmp_path / "state"
@@ -792,7 +757,6 @@ def test_kill_and_resume_packing_sink_exactly_once(spark, tmp_path):
     sink = streaming_packing_sink(
         str(state_dir), writer, budget=10, audit=audit
     )
-    schema = spark.read.parquet(str(src)).schema
 
     def run_once():
         stream = (
@@ -815,13 +779,7 @@ def test_kill_and_resume_packing_sink_exactly_once(spark, tmp_path):
 
     # batch 1 arrives; the sink dies AFTER writing its manifest but
     # BEFORE committing the offset state — the kill
-    stage1 = tmp_path / "stage1"
-    spark.createDataFrame(batches[1], "doc_id long, n_tokens long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(stage1))
-    f1 = src / "f1.parquet"
-    shutil.copy(next(stage1.glob("*.parquet")), f1)
-    os.utime(f1, (1_001_000, 1_001_000))
+    stage_micro_batches(spark, src, batches[1:], schema, first=1)
 
     crash["after_batch_id"] = 1
     with pytest.raises(StreamingQueryException, match="injected crash"):
@@ -851,51 +809,19 @@ def test_streaming_dedup_ingest_rejects_short_doc_exact_dup(spark, tmp_path):
     """Documents too short to shingle are invisible to the LSH probe;
     the sink's exact-hash anti-join must still reject their verbatim
     cross-batch duplicates (the short-doc admission hole)."""
-    import os
-    import shutil
-
-    from spark_etl_agent_spark.streaming.pipeline import (
-        run_available_now,
-        streaming_dedup_ingest_sink,
-    )
-
     batches = [
         [(1, "hi there")],          # 2 words: shingle-less, novel
         [(2, "hi there")],          # exact dup of a short doc -> reject
         [(3, "hello world")],       # different short doc -> novel
     ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(stage))
-        dst = src / f"f{i}.parquet"
-        shutil.copy(next(stage.glob("*.parquet")), dst)
-        os.utime(dst, (2_000_000 + i * 1000, 2_000_000 + i * 1000))
-
-    sink_dir = tmp_path / "accepted"
-
-    def index_provider():
-        if not sink_dir.exists() or not any(sink_dir.glob("*.parquet")):
-            return None
-        return spark.read.parquet(str(sink_dir))
-
-    def writer(df, batch_id):
-        df.coalesce(1).write.mode("append").parquet(str(sink_dir))
-
-    schema = spark.read.parquet(str(src)).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+    src = stage_micro_batches(
+        spark, tmp_path / "src", batches, "doc_id long, text string"
     )
-    run_available_now(
-        stream, output_mode="append",
-        foreach_batch=streaming_dedup_ingest_sink(index_provider, writer),
-    )
+    sink = tmp_path / "accepted"
+    audit: list = []
+    _run_ingest_stream(spark, src, sink, audit)
     accepted = sorted(
-        r["doc_id"] for r in spark.read.parquet(str(sink_dir)).collect()
+        r["doc_id"] for r in spark.read.parquet(str(sink)).collect()
     )
     assert accepted == [1, 3]
+    assert sorted(audit) == [(0, 1, 0, 0, 1), (1, 1, 0, 1, 0), (2, 1, 0, 0, 1)]
