@@ -245,7 +245,7 @@ def main() -> None:
                     rdd.unpersist(False)
 
     # Builds stay serial (one builder thread) but are queued a few
-    # ahead, so a build-heavy spec (iterative BPE/k-means loops,
+    # ahead, so a build-heavy spec (iterative k-means/PageRank loops,
     # AvailableNow streaming runs) starts while earlier queries still
     # execute instead of stalling the loop when its turn comes.
     lookahead = max(1, int(os.environ.get("SPARK_GRAFT_BUILD_LOOKAHEAD", "2")))

@@ -6,15 +6,15 @@ vocabulary, merge the globally most frequent pair, re-segment, repeat.
 The output is the ordered merge table — exactly what a BPE tokenizer
 ships as its ``merges.txt``.
 
-Scale shape per round (same physics as ``llm.kmeans`` Lloyd rounds):
-
-- pair counting: one bounded shuffle (pair keys ≤ |alphabet ∪ merges|²)
-  over the *vocabulary* (distinct words × frequency), not the corpus —
-  the corpus is scanned exactly once, at vocabulary build.
-- the winning pair is a **one-row collect** (a scalar envelope, like
-  the k-means convergence check — never data rows).
-- re-segmentation is a native ``regexp_replace`` over the vocabulary;
-  ``localCheckpoint`` per round truncates the growing lineage.
+Scale shape: the corpus is scanned exactly once, by the Spark
+vocabulary build (explode + word ``groupBy``, the distributed part).
+The vocabulary (distinct words × frequency) is collected to the driver
+once and every merge round runs there in plain Python — no Spark job,
+shuffle or checkpoint per round, so the job count does not grow with
+``n_merges``. Driver memory is bounded by the distinct words of length
+≥ 2: no more than the distinct-word table the encode's broadcast
+(``bpe_encode_stats``) already collects, and the same table an earlier
+per-round Spark loop already forced into a single task.
 
 Determinism: ties on pair count break on the pair string, so the merge
 sequence is reproducible at any partition count. Verified against a
@@ -24,6 +24,7 @@ pure-Python reference implementation in ``tests/test_operators.py``.
 from __future__ import annotations
 
 import re
+from collections import Counter
 from typing import List, Tuple
 
 from pyspark.sql import DataFrame
@@ -52,26 +53,23 @@ def build_symbol_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _pair_counts(vocab: DataFrame) -> DataFrame:
-    # single-symbol (fully merged) words contribute no pairs — and
-    # sequence(1, 0) counts DOWN in Spark, so they must not reach the
-    # transform at all
-    toks = vocab.select(F.split("symbols", " ").alias("t"), "wfreq").filter(
-        F.size("t") >= 2
-    )
-    return (
-        toks.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), "
-                    "i -> concat(t[i-1], ' ', t[i]))"
-                )
-            ).alias("pair"),
-            "wfreq",
-        )
-        .groupBy("pair")
-        .agg(F.sum("wfreq").alias("n"))
-    )
+def _merge_symbols(symbols: List[str], left: str, right: str) -> List[str]:
+    """Merge every ``left, right`` neighbour pair, left to right without
+    overlap — the greedy order reference BPE implementations use."""
+    out: List[str] = []
+    i = 0
+    while i < len(symbols):
+        if (
+            i + 1 < len(symbols)
+            and symbols[i] == left
+            and symbols[i + 1] == right
+        ):
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(symbols[i])
+            i += 1
+    return out
 
 
 def bpe_train(
@@ -81,45 +79,29 @@ def bpe_train(
     the same merges as a Python list). Stops early if no pair occurs
     more than once."""
     spark = df.sparkSession
-    # The vocabulary build (corpus-wide explode + word groupBy) is the
-    # distributed part and keeps the session's full shuffle width. The
-    # ITERATIVE part then runs on the aggregated vocabulary — a
-    # frequency table that is KB-MB even for a 100 TB corpus — so it is
-    # repartitioned to ONE partition first: every training round
-    # becomes a single-task job instead of paying scheduler+shuffle
-    # latency per round on sketch-sized data (measured ~2x on the
-    # 6-round loop; any real BPE trainer is single-node at this stage).
-    vocab = (
-        build_symbol_vocab(df, text_col).repartition(1).localCheckpoint()
-    )
+    # the vocabulary is a frequency table (KB-MB even for a 100 TB
+    # corpus): collect it once and run the merge rounds on the driver
+    vocab = [
+        (r["symbols"].split(" "), r["wfreq"])
+        for r in build_symbol_vocab(df, text_col).collect()
+    ]
     merges: List[Tuple[str, str, int]] = []
-    for round_no in range(n_merges):
-        top = (
-            _pair_counts(vocab)
-            .orderBy(F.desc("n"), "pair")
-            .limit(1)
-            .collect()  # one row — the round's winner, a scalar envelope
-        )
-        if not top or top[0]["n"] < 2:
+    for _ in range(n_merges):
+        counts: Counter = Counter()
+        for symbols, wfreq in vocab:
+            for pair in zip(symbols, symbols[1:]):
+                counts[pair] += wfreq
+        if not counts:
             break
-        pair, n = top[0]["pair"], top[0]["n"]
-        left, right = pair.split(" ")
-        merges.append((left, right, n))
-        # whole-token replace: "left right" bounded by start/space/end;
-        # Java regex replaces left-to-right non-overlapping — the same
-        # greedy order reference BPE implementations use
-        pattern = f"(^|(?<= )){re.escape(left)} {re.escape(right)}((?= )|$)"
-        vocab = vocab.select(
-            F.regexp_replace("symbols", pattern, left + right).alias("symbols"),
-            "wfreq",
+        # largest count, ties on the ascending pair string: code-point
+        # order equals Spark's UTF-8 binary order
+        (left, right), n = min(
+            counts.items(), key=lambda kv: (-kv[1], f"{kv[0][0]} {kv[0][1]}")
         )
-        # each round adds ONE cheap projection to the lineage, so a
-        # sparse checkpoint bounds plan growth for deep trainings
-        # without paying a vocabulary-materialization job per few
-        # rounds (each localCheckpoint is its own Spark job — at small
-        # n_merges that job latency dominated the whole training loop)
-        if (round_no + 1) % 8 == 0:
-            vocab = vocab.localCheckpoint()
+        if n < 2:
+            break
+        merges.append((left, right, n))
+        vocab = [(_merge_symbols(s, left, right), w) for s, w in vocab]
     table = spark.createDataFrame(
         [
             (i + 1, left, right, left + right, n)
@@ -140,11 +122,10 @@ MAX_EXPR_MERGES = 64
 def _merge_pass(arr, left: str, right: str):
     """One full left-to-right non-overlapping pass of a single merge
     over a symbol array — the exact greedy order of the trainer's
-    anchored ``regexp_replace``, expressed as an array fold with plain
-    string equality (no per-word regex scan). After a merge fires the
-    accumulated tail is the merged token, which can never equal
-    ``left`` again (it is strictly longer), so overlap is impossible —
-    same non-overlap guarantee the regex continuation gives."""
+    ``_merge_symbols``, expressed as an array fold with plain string
+    equality. After a merge fires the accumulated tail is the merged
+    token, which can never equal ``left`` again (it is strictly
+    longer), so overlap is impossible."""
     merged = left + right
     return F.aggregate(
         arr,
@@ -251,21 +232,7 @@ def _encode_token_count(word: str, ranks: dict) -> int:
                 best_rank, best = r, (symbols[i], symbols[i + 1])
         if best is None:
             break
-        left, right = best
-        out = []
-        i = 0
-        while i < len(symbols):
-            if (
-                i + 1 < len(symbols)
-                and symbols[i] == left
-                and symbols[i + 1] == right
-            ):
-                out.append(left + right)
-                i += 2
-            else:
-                out.append(symbols[i])
-                i += 1
-        symbols = out
+        symbols = _merge_symbols(symbols, *best)
     return len(symbols)
 
 

@@ -164,7 +164,8 @@ def bpe_pair_counts(df: DataFrame, text_col: str = "text", k: int = 50) -> DataF
     corpus frequency. Two bounded shuffles (word, then pair ≤
     alphabet²); the raw text is scanned exactly once. Each merge round
     of real BPE training re-runs this count over the re-segmented
-    vocabulary — the plan shape is identical per round.
+    vocabulary; ``llm.bpe.bpe_train`` collects the vocabulary once and
+    runs those rounds on the driver.
     """
     wf = (
         df.select(F.explode(words_of(F.col(text_col))).alias("word"))

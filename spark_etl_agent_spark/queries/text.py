@@ -175,7 +175,7 @@ def bpe_train_merges(spark, sf_dir):
     """Iterative BPE training (6 merge rounds) over the corpus — the
     ordered merge table a tokenizer ships. Oracled by an UNROLLED
     6-round DuckDB program (``_bpe_oracle_sql``): each round's winner
-    feeds the next round's re-segmentation, exactly like the Spark
+    feeds the next round's re-segmentation, exactly like the trainer's
     loop, so the driver's independent check covers the full iterative
     algorithm (additionally pinned against a pure-Python reference in
     ``test_bpe_train_matches_pure_python_reference``)."""
@@ -194,12 +194,12 @@ def _bpe_oracle_sql(n_merges: int = 6) -> str:
     (a, b) is then a plain ``replace(w, ' a  b ', ' ab ')``: SQL
     ``replace`` rewrites non-overlapping occurrences left-to-right,
     which is exactly the greedy order of reference BPE (and of the
-    Spark side's anchored ``regexp_replace``), and the single-space
-    replacement string restores the invariant at the seam. Ties break
-    on the pair string in both engines (binary UTF-8 collation in
-    both). A round whose best pair occurs < 2 times yields an empty
-    winner CTE, which empties every later round — the same early-stop
-    the Spark loop takes."""
+    trainer's ``_merge_symbols``), and the single-space replacement
+    string restores the invariant at the seam. Ties break on the pair
+    string in both engines (binary UTF-8 collation here, code-point
+    order in the trainer: the same order). A round whose best pair
+    occurs < 2 times yields an empty winner CTE, which empties every
+    later round — the same early-stop the trainer takes."""
     parts = [
         "WITH v0 AS (",
         "  SELECT ' ' || array_to_string(list_transform(range(1, length(word) + 1),",
@@ -247,8 +247,9 @@ def bpe_encode_corpus(spark, sf_dir):
     """Train 6 merges, then tokenize the WHOLE corpus with them and
     report per-doc stats (words, chars, BPE tokens, chars/token) —
     the train→apply round trip a tokenizer pipeline ships. The encode
-    itself is one zero-shuffle codegen'd projection
-    (``llm.bpe.bpe_encode_stats``)."""
+    (``llm.bpe.bpe_encode_stats``) replays the merges once per distinct
+    word and broadcast-joins the result back: two shuffles, the word
+    ``distinct`` and the per-document aggregate."""
     from ..llm.bpe import bpe_encode_stats, bpe_train
 
     docs = fan_out(load(spark, sf_dir, "documents"))

@@ -104,6 +104,7 @@ def test_merge_paired_rejects_tag_without_round_number():
 def test_pagerank_hinted_smj_values_on_larger_graph(spark):
     from pyspark.sql import functions as F
 
+    from spark_etl_agent_spark.core.cache import scoped_caches
     from spark_etl_agent_spark.operators.pagerank import pagerank
 
     pairs = {(i, (i * 13 + 5) % 211) for i in range(1, 211)}
@@ -111,19 +112,21 @@ def test_pagerank_hinted_smj_values_on_larger_graph(spark):
     edges = spark.createDataFrame(rows, "src long, dst long").filter(
         F.col("src") != F.col("dst")
     )
-    base_rows = sorted(
-        map(tuple, pagerank(edges, iters=3, symmetric=True).collect())
-    )
-    smj_rows = sorted(
-        map(
-            tuple,
-            pagerank(
-                edges,
-                iters=3,
-                symmetric=True,
-                n_nodes_hint=10_000_000,  # above the 4M gate → SMJ
-            ).collect(),
+    # scoped: pagerank's per-round checkpoints are released here
+    with scoped_caches(spark):
+        base_rows = sorted(
+            map(tuple, pagerank(edges, iters=3, symmetric=True).collect())
         )
-    )
+        smj_rows = sorted(
+            map(
+                tuple,
+                pagerank(
+                    edges,
+                    iters=3,
+                    symmetric=True,
+                    n_nodes_hint=10_000_000,  # above the 4M gate → SMJ
+                ).collect(),
+            )
+        )
     assert smj_rows == base_rows
     assert len(base_rows) > 100

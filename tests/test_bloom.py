@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from spark_etl_agent_spark.core.cache import scoped_caches
 from spark_etl_agent_spark.llm.spans import duplicate_span_stats
 from spark_etl_agent_spark.operators.bloom import (
     bloom_antijoin,
@@ -46,9 +47,10 @@ def test_bloom_antijoin_equals_plain_antijoin(spark, sf_dir):
     )
     batch = keyed.filter(F.col("doc_id") % 5 == 0)
     index = keyed.filter(F.col("doc_id") % 5 != 0)
-    got = sorted(
-        (r.doc_id, r.k) for r in bloom_antijoin(batch, index, "k").collect()
-    )
+    with scoped_caches(spark):
+        got = sorted(
+            (r.doc_id, r.k) for r in bloom_antijoin(batch, index, "k").collect()
+        )
     want = sorted(
         (r.doc_id, r.k)
         for r in batch.join(index.select("k"), "k", "left_anti").collect()
@@ -63,7 +65,8 @@ def test_bloom_antijoin_keeps_null_keys(spark):
         [Row(id=1, k="a"), Row(id=2, k=None), Row(id=3, k="zzz")]
     )
     index = spark.createDataFrame([Row(k="a"), Row(k="b")])
-    got = sorted(r.id for r in bloom_antijoin(batch, index, "k").collect())
+    with scoped_caches(spark):
+        got = sorted(r.id for r in bloom_antijoin(batch, index, "k").collect())
     assert got == [2, 3]
 
 

@@ -4,6 +4,7 @@ that makes the DuckDB oracle meaningful and nightly totals stable).
 Run the decimal-sum flagship and a sampled query under different
 partitionings and require bit-identical results."""
 
+from spark_etl_agent_spark.core.cache import scoped_caches
 from spark_etl_agent_spark.queries import registry
 from spark_etl_agent_spark.queries.base import load
 
@@ -153,13 +154,15 @@ def test_query_results_shuffle_partition_independent(spark, sf_dir):
         "pq_encode_cells",
     ]
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    baseline = {n: _rows(SPECS[n].spark(spark, sf_dir)) for n in sample}
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        for n in sample:
-            assert _rows(SPECS[n].spark(spark, sf_dir)) == baseline[n], n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    # scoped: the specs' checkpoints and caches are released here
+    with scoped_caches(spark):
+        baseline = {n: _rows(SPECS[n].spark(spark, sf_dir)) for n in sample}
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", "3")
+            for n in sample:
+                assert _rows(SPECS[n].spark(spark, sf_dir)) == baseline[n], n
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_grouped_quantile_cont_matches_percentile_any_npart(spark, sf_dir):

@@ -425,12 +425,57 @@ def test_merge_partial_aggs_equals_direct_and_rejects_unmergeable(spark):
         merge_partial_aggs(base, delta, ["k"], [("n", "avg")])
 
 
+def _ref_bpe_vocab(texts):
+    """Weighted vocabulary of lower-cased, char-split words of length
+    >= 2 (texts must use ASCII whitespace only: Python's ``\\s`` is
+    wider than Java's)."""
+    import re
+    from collections import Counter
+
+    vocab = Counter()
+    for t in texts:
+        for w in re.split(r"\s+", t.lower()):
+            if len(w) >= 2:
+                vocab[" ".join(w)] += 1
+    return vocab
+
+
+def _ref_bpe_merges(vocab, n_rounds):
+    """Classic single-machine BPE over a ``{"a b c": freq}`` vocabulary:
+    max pair count, ties broken on the pair string ascending, stop when
+    no pair occurs twice; re-segment with an anchored regex."""
+    import re
+    from collections import Counter
+
+    out = []
+    vocab = dict(vocab)
+    for _ in range(n_rounds):
+        pairs = Counter()
+        for sym, freq in vocab.items():
+            toks = sym.split(" ")
+            for a, b in zip(toks, toks[1:]):
+                pairs[f"{a} {b}"] += freq
+        if not pairs:
+            break
+        # max count, ties broken on pair string ascending
+        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        if best[1] < 2:
+            break
+        a, b = best[0].split(" ")
+        out.append((a, b, best[1]))
+        merged = {}
+        pat = re.compile(f"(^|(?<= )){re.escape(a)} {re.escape(b)}((?= )|$)")
+        for sym, freq in vocab.items():
+            new = pat.sub(a + b, sym)
+            merged[new] = merged.get(new, 0) + freq
+        vocab = merged
+    return out
+
+
 def test_bpe_train_matches_pure_python_reference(spark):
     """The distributed BPE loop must reproduce the classic
     single-machine algorithm exactly: same merge sequence, same counts
     (ties broken on the pair string in both)."""
-    from collections import Counter
-
     from spark_etl_agent_spark.llm.bpe import bpe_train
 
     texts = [
@@ -439,41 +484,7 @@ def test_bpe_train_matches_pure_python_reference(spark):
         "wider wide widest wider",
     ]
 
-    # pure-python reference: weighted vocab of char-split words
-    vocab = Counter()
-    for t in texts:
-        for w in t.split():
-            if len(w) >= 2:
-                vocab[" ".join(w)] += 1
-
-    def ref_merges(vocab, n_rounds):
-        out = []
-        vocab = dict(vocab)
-        for _ in range(n_rounds):
-            pairs = Counter()
-            for sym, freq in vocab.items():
-                toks = sym.split(" ")
-                for a, b in zip(toks, toks[1:]):
-                    pairs[f"{a} {b}"] += freq
-            if not pairs:
-                break
-            # max count, ties broken on pair string ascending
-            best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-            if best[1] < 2:
-                break
-            a, b = best[0].split(" ")
-            out.append((a, b, best[1]))
-            merged = {}
-            import re as _re
-
-            pat = _re.compile(f"(^|(?<= )){_re.escape(a)} {_re.escape(b)}((?= )|$)")
-            for sym, freq in vocab.items():
-                new = pat.sub(a + b, sym)
-                merged[new] = merged.get(new, 0) + freq
-            vocab = merged
-        return out
-
-    want = ref_merges(vocab, 8)
+    want = _ref_bpe_merges(_ref_bpe_vocab(texts), 8)
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
     table, got = bpe_train(df, n_merges=8)
     assert got == want and len(got) >= 5
@@ -481,6 +492,78 @@ def test_bpe_train_matches_pure_python_reference(spark):
     assert rows == [
         (i + 1, a, b, a + b) for i, (a, b, n) in enumerate(want)
     ]
+
+
+def test_bpe_train_edge_cases_match_reference(spark):
+    """Count ties, non-ASCII and regex-metacharacter symbols, an
+    overlapping run, a word merged down to one symbol and the early
+    stop all match the reference; a frame with no word of length >= 2
+    gives no merges and an empty table with the declared schema."""
+    from spark_etl_agent_spark.llm.bpe import bpe_train
+
+    texts = [
+        "aaaa aaaa",  # overlapping run: a a a a -> aa aa -> aaaa
+        "qr qr st st",  # tie at 2: "q r" < "s t"
+        "éa éa za za",  # tie at 2: "z a" < "é a" in code-point order
+        "a+b a+b c.c c.c (x) (x)",  # metacharacters stay literal
+        "Once only",  # pairs seen once: never merged
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
+    )
+    want = _ref_bpe_merges(_ref_bpe_vocab(texts), 50)
+    table, got = bpe_train(df, n_merges=50)
+    assert got == want
+    assert len(got) < 50  # stopped early: no pair left with count >= 2
+    assert got[0] == ("a", "a", 6) and ("aa", "aa", 2) in got
+    assert got.index(("q", "r", 2)) < got.index(("s", "t", 2))
+    assert got.index(("z", "a", 2)) < got.index(("é", "a", 2))
+    assert {"a+b", "c.c", "(x)"} <= {a + b for a, b, _ in got}
+    rows = [tuple(r) for r in table.orderBy("merge_rank").collect()]
+    assert rows == [(i + 1, a, b, a + b, n) for i, (a, b, n) in enumerate(want)]
+
+    short = spark.createDataFrame([(0, "a b c"), (1, "x"), (2, "")], ["doc_id", "text"])
+    empty, merges = bpe_train(short, n_merges=4)
+    assert merges == [] and empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<merge_rank:int,left:string,right:string,"
+        "merged:string,n_occurrences:bigint>"
+    )
+
+
+def test_bpe_train_jobs_and_storage_independent_of_merges(spark, pinned_rdds):
+    """Training launches the same Spark jobs at 2 and at 8 merges (the
+    merge rounds run on the driver) and leaves no persisted RDD or
+    cached plan behind."""
+    from spark_etl_agent_spark.core.cache import _cached_entries, _persistent_rdd_ids
+    from spark_etl_agent_spark.llm.bpe import bpe_train
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        [
+            (0, "low lower lowest low low"),
+            (1, "newer newest new low news"),
+            (2, "wider wide widest wider"),
+        ],
+        ["doc_id", "text"],
+    )
+
+    def train(n_merges):
+        rdds, n_cached = _persistent_rdd_ids(spark), len(_cached_entries(spark))
+        group = f"bpe-train-{n_merges}"
+        sc.setJobGroup(group, group)
+        try:
+            _, merges = bpe_train(df, n_merges=n_merges)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert _persistent_rdd_ids(spark) == rdds
+        assert len(_cached_entries(spark)) == n_cached
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return len(merges), len(sc.statusTracker().getJobIdsForGroup(group))
+
+    (m2, jobs2), (m8, jobs8) = train(2), train(8)
+    assert (m2, m8) == (2, 8)
+    assert 0 < jobs2 == jobs8
 
 
 def test_scoped_caches_releases_only_block_created_storage(spark, pinned_rdds):
