@@ -213,36 +213,33 @@ def main() -> None:
     # query N+1's build just created (a .persist() registers its
     # storage-holding RDD immediately), silently disabling N+1's
     # caching — the 14.7 s simhash regression. Instead the builder
-    # records which persistent-RDD ids each build registered, and
-    # cleanup releases everything EXCEPT the upcoming query's own ids.
+    # records which persistent RDDs and CacheManager entries existed
+    # when each build started, and cleanup releases those, never the
+    # upcoming query's own.
     from concurrent.futures import ThreadPoolExecutor
 
-    from spark_etl_agent_spark.core.cache import _persistent_rdd_ids
+    from spark_etl_agent_spark.core.cache import (
+        _cached_entry_set,
+        _persistent_rdd_ids,
+        release_storage,
+    )
 
-    # ids present when each build STARTED: everything registered later
-    # is either that build's own persists or the concurrently-executing
-    # previous query's checkpoints — both stay one round (the former
-    # because the upcoming query needs them, the latter as a bounded
-    # one-query leak swept by the next cleanup).
-    pre: dict[str, set] = {}
+    # RDD ids and cache entries present when each build STARTED:
+    # everything registered later is either that build's own persists
+    # or the concurrently-executing previous query's checkpoints — both
+    # stay one round (the former because the upcoming query needs them,
+    # the latter as a bounded one-query leak swept by the next cleanup).
+    pre: dict[str, tuple] = {}
     build_span: dict[str, tuple] = {}  # name -> (build_start, build_end)
 
     cal_pre = host_calibration(sf_dir, cores)
 
     def build(name):
-        pre[name] = _persistent_rdd_ids(spark)
+        pre[name] = (_persistent_rdd_ids(spark), _cached_entry_set(spark))
         b0 = time.perf_counter()
         df = specs[name].spark(spark, sf_dir)
         build_span[name] = (b0, time.perf_counter())
         return df
-
-    def release_older_than(floor: set) -> None:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jid in jmap.keySet().toArray():
-            if jid in floor:
-                rdd = jmap.get(jid)
-                if rdd is not None:
-                    rdd.unpersist(False)
 
     # Builds stay serial (one builder thread) but are queued a few
     # ahead, so a build-heavy spec (iterative k-means/PageRank loops,
@@ -288,9 +285,9 @@ def main() -> None:
             if i + 1 < len(names):
                 floor = pre.get(names[i + 1])
                 if floor is not None:  # build not yet started: skip a round
-                    release_older_than(floor)
+                    release_storage(spark, *floor)
             else:
-                release_older_than(_persistent_rdd_ids(spark))
+                release_storage(spark, _persistent_rdd_ids(spark), _cached_entry_set(spark))
     loop_wall = round(time.perf_counter() - t_loop0, 3)
     # stop the JVM before the post probe: an alive 32-slot local JVM's
     # background threads depress the fork-pool reading by ~2x even

@@ -39,6 +39,34 @@ def _cached_entries(spark: SparkSession):
     )
 
 
+def _cached_entry_set(spark: SparkSession):
+    """The CacheManager entries registered now, as an identity set: a
+    ``CachedData`` is a case class, and its structural equals would
+    compare whole plans."""
+    jvm = spark._jvm
+    entries = jvm.java.util.Collections.newSetFromMap(jvm.java.util.IdentityHashMap())
+    entries.addAll(_cached_entries(spark))
+    return entries
+
+
+def release_storage(spark: SparkSession, rdd_ids: set, entries) -> None:
+    """Release the persisted RDDs in ``rdd_ids`` and the CacheManager
+    entries in the identity set ``entries`` (from ``_cached_entry_set``)
+    that are still registered. An entry is dropped with ``cascade=False``:
+    a cache built on top of it belongs to its own owner."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    for entry in _cached_entries(spark):
+        if entries.contains(entry):
+            cache_manager.uncacheQuery(spark._jsparkSession, entry.plan(), False, False)
+    # localCheckpoints have no CacheManager entry
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for jid in jmap.keySet().toArray():
+        if jid in rdd_ids:
+            rdd = jmap.get(jid)
+            if rdd is not None:
+                rdd.unpersist(False)
+
+
 @contextmanager
 def scoped_caches(spark: SparkSession):
     """Release every DataFrame cache and persisted RDD *created inside*
@@ -49,30 +77,11 @@ def scoped_caches(spark: SparkSession):
     ...     verdicts.count()      # probe's internal persists live here
     ... # ...and are released here; the caller's own caches survive
     """
-    jvm = spark._jvm
-    # identity set: a CachedData is a case class, and its structural
-    # equals would compare whole plans
-    cached_before = jvm.java.util.Collections.newSetFromMap(
-        jvm.java.util.IdentityHashMap()
-    )
-    cached_before.addAll(_cached_entries(spark))
+    cached_before = _cached_entry_set(spark)
     rdds_before = _persistent_rdd_ids(spark)
     try:
         yield
     finally:
-        created = jvm.java.util.ArrayList(_cached_entries(spark))
+        created = _cached_entry_set(spark)
         created.removeAll(cached_before)
-        cache_manager = spark._jsparkSession.sharedState().cacheManager()
-        for entry in created:
-            # cascade=False: drop this entry only, never a dependent
-            # cache owned outside the block
-            cache_manager.uncacheQuery(
-                spark._jsparkSession, entry.plan(), False, False
-            )
-        # localCheckpoints have no CacheManager entry
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jid in jmap.keySet().toArray():
-            if jid not in rdds_before:
-                rdd = jmap.get(jid)
-                if rdd is not None:
-                    rdd.unpersist(False)
+        release_storage(spark, _persistent_rdd_ids(spark) - rdds_before, created)

@@ -106,6 +106,13 @@ class SparkManager:
             "spark.sql.adaptive.skewJoin.enabled": "true",
             "spark.sql.shuffle.partitions": str(shuffle),
             "spark.sql.parquet.filterPushdown": "true",
+            # Generated-code cache, kept per JVM and evicted LRU. A
+            # session that reruns its jobs reuses their compiled classes
+            # only if one round of them fits: one benchmark etl_jobs day
+            # (corpus_ingest_etl + corpus_release_etl) compiles 115-126
+            # classes and one corpus_llm pass 58, so at Spark's default
+            # of 100 every class of a day is evicted before its rerun.
+            "spark.sql.codegen.cache.maxEntries": "1000",
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
         }

@@ -18,6 +18,7 @@ SESSION_DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

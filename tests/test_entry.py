@@ -45,6 +45,7 @@ def test_session_scale_posture(spark):
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
     assert conf.get("spark.sql.session.timeZone") == "UTC"
     assert conf.get("spark.sql.parquet.filterPushdown") == "true"
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
 
 
 def test_driver_window_is_first_50_registry_entries():

@@ -1182,3 +1182,84 @@ def test_corpus_ingest_registered_and_listed(job_service):
     listing = job_service.list_supported_job_types()
     assert "corpus_ingest_etl" in listing
     assert "Corpus" in listing["corpus_ingest_etl"]
+
+
+def _codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM (Spark's codegen metric)."""
+    metrics = getattr(
+        spark.sparkContext._jvm.org.apache.spark.metrics.source, "CodegenMetrics$"
+    ).__getattr__("MODULE$")
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_job_rerun_reuses_generated_code_codegen(spark, tmp_path):
+    """A long-lived session that reruns its jobs (the continuous runner)
+    compiles their generated code once. Three days of corpus_ingest_etl
+    then corpus_release_etl on one catalog: days 2 and 3 run the same
+    plan shapes (hash, id and LSH probes, versioned publish with a
+    snapshot diff), so day 3 finds its classes in the codegen cache.
+    With a cache smaller than one day's ~118 classes every one of them
+    is evicted before its rerun; what day 3 may still compile is the
+    candidate-id fetch, whose ids are written into its code."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    incoming = tmp_path / "wh" / "corpus" / "incoming"
+    incoming.mkdir(parents=True)
+    svc = JobService(cat, stage_path=str(tmp_path / "stage"), alerter=LogAlerter())
+
+    def text(day, i):
+        return " ".join(f"w{day}x{i}x{j}" for j in range(12))
+
+    release = {i: text(0, i) for i in range(40)}
+    next_id = 1000
+
+    def run_day(day):
+        nonlocal next_id
+        rows = []
+        for i in range(6):
+            rows.append((next_id, text(day, i)))
+            next_id += 1
+        if day > 1:
+            # an exact copy and a near-duplicate of the day before's
+            # documents, so each day probes other candidate ids
+            rows.append((next_id, text(day - 1, 0)))
+            rows.append((next_id + 1, text(day - 1, 1) + " dup"))
+            next_id += 2
+        _stage_delivery(spark, rows, incoming, day)
+        if day > 1:
+            # release candidate: 3 deletes, 3 updates, 3 inserts
+            for i in sorted(release)[:3]:
+                del release[i]
+            for i in sorted(release)[:3]:
+                release[i] += f" v{day}"
+            for i in range(3):
+                release[100 * day + i] = text(100 + day, i)
+        cat.write_table(
+            spark.createDataFrame(
+                [(i, t, "en", "web", len(t)) for i, t in sorted(release.items())],
+                "doc_id long, text string, lang string, source string, n_chars long",
+            ),
+            "staging.corpus",
+            mode="overwrite",
+        )
+        for job_type in ("corpus_ingest_etl", "corpus_release_etl"):
+            env = svc.execute_job(
+                {"id": f"{day}-{job_type}", "type": job_type,
+                 "load_date": f"2026-09-0{day}"}
+            )
+            assert env["status"] == "Success", env.get("error")
+            if job_type == "corpus_ingest_etl":
+                assert env["n_input"] == len(rows)
+                # the exact copy goes, the fresh documents stay
+                assert 6 <= env["n_novel"] <= 6 + (day > 1)
+            else:
+                assert env["version"] == day
+                assert env["diff"] == (
+                    {"insert": 3, "update": 3, "delete": 3} if day > 1 else {}
+                )
+
+    run_day(1)
+    run_day(2)
+    before = _codegen_compiles(spark)
+    run_day(3)
+    compiled = _codegen_compiles(spark) - before
+    assert compiled <= 10, compiled

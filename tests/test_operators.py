@@ -605,6 +605,45 @@ def test_scoped_caches_releases_only_block_created_storage(spark, pinned_rdds):
         outer.unpersist()
 
 
+def test_release_storage_releases_given_rdds_and_entries(spark, pinned_rdds):
+    """release_storage drops exactly the persisted RDDs and CacheManager
+    entries it is given, the way bench.py releases what predates the
+    next build: a cache outside the sets survives, and both registries
+    return to their starting size."""
+    from pyspark import StorageLevel
+
+    from spark_etl_agent_spark.core.cache import (
+        _cached_entries,
+        _cached_entry_set,
+        _persistent_rdd_ids,
+        release_storage,
+    )
+
+    base_ids = _persistent_rdd_ids(spark)
+    n_cached = len(_cached_entries(spark))
+    ids0, entries0 = _persistent_rdd_ids(spark), _cached_entry_set(spark)
+    old = spark.range(20).persist(StorageLevel.MEMORY_AND_DISK)
+    old.count()
+    ck = spark.range(5).localCheckpoint()
+    ck.count()
+    ids1, entries1 = _persistent_rdd_ids(spark), _cached_entry_set(spark)
+    entries1.removeAll(entries0)
+    outer = spark.range(10).persist(StorageLevel.MEMORY_AND_DISK)
+    outer.count()
+    try:
+        assert len(_cached_entries(spark)) == n_cached + 2
+        release_storage(spark, ids1 - ids0, entries1)
+        assert len(_cached_entries(spark)) == n_cached + 1
+        assert not old.storageLevel.useMemory
+        plan = outer._jdf.queryExecution().executedPlan().toString()
+        assert outer.storageLevel.useMemory and "InMemoryTableScan" in plan
+        assert outer.count() == 10
+    finally:
+        outer.unpersist()
+    assert _persistent_rdd_ids(spark) == base_ids
+    assert len(_cached_entries(spark)) == n_cached
+
+
 def test_bpe_encode_arrow_path_matches_expression_path(spark):
     """The two encode engines (fold-expression projection vs the
     Arrow ``mapInPandas`` rank-priority encode used for vocab-scale
