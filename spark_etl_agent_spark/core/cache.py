@@ -34,7 +34,7 @@ def _cached_entries(spark: SparkSession):
     ``java.util.List`` — the registry a ``DataFrame.persist`` adds its
     plan to, which an RDD unpersist alone leaves in place."""
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    return spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+    return getattr(spark._jvm, "scala.jdk.javaapi.CollectionConverters").asJava(
         cache_manager.cachedData()
     )
 
@@ -44,7 +44,9 @@ def _cached_entry_set(spark: SparkSession):
     ``CachedData`` is a case class, and its structural equals would
     compare whole plans."""
     jvm = spark._jvm
-    entries = jvm.java.util.Collections.newSetFromMap(jvm.java.util.IdentityHashMap())
+    entries = getattr(jvm, "java.util.Collections").newSetFromMap(
+        getattr(jvm, "java.util.IdentityHashMap")()
+    )
     entries.addAll(_cached_entries(spark))
     return entries
 
@@ -55,7 +57,10 @@ def release_storage(spark: SparkSession, rdd_ids: set, entries) -> None:
     that are still registered. An entry is dropped with ``cascade=False``:
     a cache built on top of it belongs to its own owner."""
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    for entry in _cached_entries(spark):
+    # iterate a copied array: py4j's iterator over a JavaList ends on a
+    # Java NoSuchElementException, which PySpark converts with a dozen
+    # class-lookup round trips
+    for entry in _cached_entries(spark).toArray():
         if entries.contains(entry):
             cache_manager.uncacheQuery(spark._jsparkSession, entry.plan(), False, False)
     # localCheckpoints have no CacheManager entry

@@ -31,7 +31,7 @@ from __future__ import annotations
 from datetime import datetime
 from typing import Any, Dict, List, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.cdc import snapshot_diff
@@ -102,9 +102,12 @@ class CorpusReleaseService:
             ):
                 diff_summary[r["change_type"]] = r["n"]
 
+        # the row count rides the write job, so the GROUPING SETS query
+        # runs once
+        card_obs = Observation()
         card = self.catalog.spark.sql(
             _DATACARD_SQL.format(view=self._register_candidate(candidate))
-        )
+        ).observe(card_obs, F.count(F.lit(1)).alias("n"))
         self.catalog.write_table(
             card,
             f"{self.release_name}_datacard.v_{version}",
@@ -122,7 +125,7 @@ class CorpusReleaseService:
             "previous_version": prev,
             "n_docs": n_docs,
             "diff": diff_summary,
-            "datacard_rows": card.count(),
+            "datacard_rows": int(card_obs.get["n"]),
             "duration_seconds": (
                 datetime.now() - start_time
             ).total_seconds(),

@@ -627,12 +627,61 @@ def incremental_neardup_verdicts_indexed(
     anti-join establishes this). A replayed id with changed text would
     otherwise be judged against its own earlier version.
 
+    The probe itself is ``_verified_probe_pairs``; this function folds
+    its verified pairs into one row per batch document. Callers in
+    long-lived sessions release the probe's persisted candidate pairs
+    via ``scoped_caches``.
+    """
+    from pyspark.sql import Window
+
+    verified = _verified_probe_pairs(index_art, batch_art, text_col, id_col)
+    # fold the verified pairs into one row per batch document;
+    # non-candidates are novel
+    w = Window.partitionBy("id_a").orderBy(
+        F.col("jaccard").desc(), F.col("id_b").asc()
+    )
+    best = (
+        verified.filter(F.col("jaccard") >= min_jaccard)
+        .withColumn("__rn", F.row_number().over(w))
+        .groupBy("id_a")
+        .agg(
+            F.count(F.lit(1)).alias("n_matches"),
+            F.min(F.when(F.col("__rn") == 1, F.col("id_b"))).alias(
+                "best_match_id"
+            ),
+            F.min(F.when(F.col("__rn") == 1, F.col("jaccard"))).alias(
+                "best_jaccard"
+            ),
+        )
+    )
+    return (
+        batch_art.select(F.col(id_col))
+        .join(best.withColumnRenamed("id_a", id_col), id_col, "left")
+        .select(
+            id_col,
+            F.coalesce(F.col("n_matches"), F.lit(0)).alias("n_matches"),
+            "best_match_id",
+            "best_jaccard",
+            (F.coalesce(F.col("n_matches"), F.lit(0)) == 0).alias("is_novel"),
+        )
+    )
+
+
+def _verified_probe_pairs(
+    index_art: DataFrame,
+    batch_art: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The incremental probe: LSH candidate ``(id_a = batch id, id_b =
+    index id)`` pairs verified by ``jaccard_verify`` (columns ``id_a,
+    id_b, n_common, n_a, n_b, jaccard``). Both frames carry
+    ``ingest_artifacts`` columns.
+
     The candidate-pair table feeds multiple consumers (the index-side
     candidate-id projection and the verify join), so it is persisted;
-    callers in long-lived sessions release it via ``scoped_caches``.
-    """
+    callers in long-lived sessions release it via ``scoped_caches``."""
     from pyspark import StorageLevel
-    from pyspark.sql import Window
 
     pairs = (
         lsh_probe_pairs(index_art, batch_art, id_col)
@@ -677,37 +726,7 @@ def incremental_neardup_verdicts_indexed(
         index_text = index_art.join(F.broadcast(cand_b), id_col).select(
             id_col, text_col
         )
-    verified = jaccard_verify(batch_art, pairs, text_col, id_col, index_text)
-    # fold the verified pairs into one row per batch document;
-    # non-candidates are novel
-    w = Window.partitionBy("id_a").orderBy(
-        F.col("jaccard").desc(), F.col("id_b").asc()
-    )
-    best = (
-        verified.filter(F.col("jaccard") >= min_jaccard)
-        .withColumn("__rn", F.row_number().over(w))
-        .groupBy("id_a")
-        .agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.min(F.when(F.col("__rn") == 1, F.col("id_b"))).alias(
-                "best_match_id"
-            ),
-            F.min(F.when(F.col("__rn") == 1, F.col("jaccard"))).alias(
-                "best_jaccard"
-            ),
-        )
-    )
-    return (
-        batch_art.select(F.col(id_col))
-        .join(best.withColumnRenamed("id_a", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_matches"), F.lit(0)).alias("n_matches"),
-            "best_match_id",
-            "best_jaccard",
-            (F.coalesce(F.col("n_matches"), F.lit(0)) == 0).alias("is_novel"),
-        )
-    )
+    return jaccard_verify(batch_art, pairs, text_col, id_col, index_text)
 
 
 def simhash_near_pairs(

@@ -128,14 +128,16 @@ def fan_out(df: DataFrame) -> DataFrame:
     if len(files) >= target:
         return df
     jvm = sc._jvm
-    max_split = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+    java_utils = getattr(jvm, "org.apache.spark.network.util.JavaUtils")
+    max_split = java_utils.byteStringAsBytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
     )
     max_split = max(1, int(max_split))
     hconf = sc._jsc.hadoopConfiguration()
+    path_cls = getattr(jvm, "org.apache.hadoop.fs.Path")
     splits = 0
     for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
+        p = path_cls(f)
         fs = p.getFileSystem(hconf)
         size = int(fs.getFileStatus(p).getLen())
         splits += max(1, -(-size // max_split))  # ceil-div, ≥1 per file

@@ -49,7 +49,7 @@ class Catalog:
     def table_exists(self, name: str) -> bool:
         """Hadoop-FS existence check (works for file://, hdfs://, s3a://)."""
         jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path(name))
+        jpath = getattr(jvm, "org.apache.hadoop.fs.Path")(self.path(name))
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return bool(fs.exists(jpath))
 
@@ -200,11 +200,11 @@ class Catalog:
         staged → live, drop backup. A crash between the renames leaves
         the backup directory for restore instead of losing the system
         of record to a half-finished overwrite."""
-        jvm = self.spark._jvm
+        path_cls = getattr(self.spark._jvm, "org.apache.hadoop.fs.Path")
         hconf = self.spark._jsc.hadoopConfiguration()
-        live = jvm.org.apache.hadoop.fs.Path(self.path(name))
-        staged_p = jvm.org.apache.hadoop.fs.Path(self.path(staged))
-        backup = jvm.org.apache.hadoop.fs.Path(self.path(name) + "__backup")
+        live = path_cls(self.path(name))
+        staged_p = path_cls(self.path(staged))
+        backup = path_cls(self.path(name) + "__backup")
         fs = live.getFileSystem(hconf)
         if fs.exists(backup):
             fs.delete(backup, True)
@@ -224,7 +224,7 @@ class Catalog:
         a top-level-only listing reports 0 for those and a maintenance
         policy gated on it would silently never compact."""
         jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path(name))
+        jpath = getattr(jvm, "org.apache.hadoop.fs.Path")(self.path(name))
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         n, it = 0, fs.listFiles(jpath, True)
         while it.hasNext():
@@ -253,7 +253,7 @@ class Catalog:
         ``tests/test_jobs.py::test_compacted_sorted_layout_skips_row_groups``).
         Returns the file count after compaction."""
         jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path(name))
+        jpath = getattr(jvm, "org.apache.hadoop.fs.Path")(self.path(name))
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         total_bytes = fs.getContentSummary(jpath).getLength()
         n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
@@ -301,7 +301,7 @@ class Catalog:
 
         df = self.read_table(name)
         jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path(name))
+        jpath = getattr(jvm, "org.apache.hadoop.fs.Path")(self.path(name))
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         size_bytes = int(fs.getContentSummary(jpath).getLength())
 
@@ -359,7 +359,7 @@ class Catalog:
 
     def drop_table(self, name: str) -> None:
         jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path(name))
+        jpath = getattr(jvm, "org.apache.hadoop.fs.Path")(self.path(name))
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         if fs.exists(jpath):
             fs.delete(jpath, True)

@@ -37,7 +37,7 @@ class FileIO:
     def _fs_and_path(self, path: str):
         jvm = self.spark._jvm
         hadoop_conf = self.spark._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        jpath = getattr(jvm, "org.apache.hadoop.fs.Path")(path)
         return jpath.getFileSystem(hadoop_conf), jpath
 
     def path_exists(self, path: str) -> bool:

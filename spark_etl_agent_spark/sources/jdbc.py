@@ -133,10 +133,10 @@ class JdbcConnector:
         encodings/sortkeys the reference's overwrite path destroyed."""
         qualified = self._qualified(table_name, schema)
         jvm = self.spark._jvm
-        props = jvm.java.util.Properties()
+        props = getattr(jvm, "java.util.Properties")()
         for k, v in self.properties.items():
             props.setProperty(k, v)
-        conn = jvm.java.sql.DriverManager.getConnection(self.url, props)
+        conn = getattr(jvm, "java.sql.DriverManager").getConnection(self.url, props)
         try:
             stmt = conn.createStatement()
             try:

@@ -47,12 +47,12 @@ class VersionedTable:
 
     def _fs(self):
         jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.base)
+        jpath = getattr(jvm, "org.apache.hadoop.fs.Path")(self.base)
         return jpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), jvm
 
     def _jpath(self, rel: str = ""):
         jvm = self.spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
+        return getattr(jvm, "org.apache.hadoop.fs.Path")(
             self.base + ("/" + rel if rel else "")
         )
 

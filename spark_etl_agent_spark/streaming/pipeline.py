@@ -44,7 +44,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # directory's NAME would match no part file and silently stream
     # zero rows). The single-file fixture layout streams the parent
     # dir filtered down to that one file.
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    jpath = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     is_dir = fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory()
     if is_dir:
@@ -286,9 +286,16 @@ def streaming_dedup_ingest_sink_indexed(
     each arriving micro-batch of documents is (1) exact-deduped within
     the batch (keep min id per content hash), then (2) probed against
     the accepted corpus — exact content hash, then id, then LSH bands
-    (``llm.dedup.incremental_neardup_verdicts_indexed`` — batch bands
-    broadcast, the index is never self-joined) — and only the NOVEL
-    documents are handed to ``novel_writer``.
+    (the probe of ``llm.dedup.incremental_neardup_verdicts_indexed`` —
+    batch bands broadcast, the index is never self-joined) — and only
+    the NOVEL documents are handed to ``novel_writer``.
+
+    The exact-dedup and the hash and id probes run once, in the one
+    checkpoint of the probe-ready batch (the "keeper"); its counts are
+    observed metrics of that job. Novelty is then one broadcast
+    anti-join of the keeper against the batch ids that have a verified
+    index match (Jaccard ≥ ``min_jaccard``), so a batch document is
+    written unless some index document near-duplicates it.
 
     The sink persists each accepted document's dedup artifacts (content
     hash, MinHash signature, shingle count —
@@ -310,11 +317,10 @@ def streaming_dedup_ingest_sink_indexed(
     (``n_dropped_vs_index`` counts exact-hash, id-replay AND near-dup
     drops against the index).
     """
+    from pyspark.sql import Observation
+
     from ..core.cache import scoped_caches
-    from ..llm.dedup import (
-        incremental_neardup_verdicts_indexed,
-        ingest_artifacts,
-    )
+    from ..llm.dedup import _verified_probe_pairs, ingest_artifacts
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         with scoped_caches(batch_df.sparkSession):
@@ -333,25 +339,11 @@ def streaming_dedup_ingest_sink_indexed(
         # anyway — buys a fully parallel explode/hash stage.
         spark = batch_df.sparkSession
         npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        # artifacts computed ONCE per batch; the eager checkpoint both
-        # enforces stream-source-read-once and materializes the
-        # artifact columns for the several consumers below. (A lazy
-        # persist filled by the audit aggregation was profiled as a
-        # wash: the checkpoint job's floor came back as InMemoryScan
-        # overhead in the write job — scripts/streaming_compact_profile.py.)
-        art = ingest_artifacts(
-            batch_df.repartition(npart)
-        ).localCheckpoint()
-        # n_in and the within-batch exact-dedup survivor count in ONE
-        # aggregation job (keeper keeps the first id per content hash,
-        # so count(keeper) == countDistinct(content_hash))
-        n_in, n_exact = art.agg(
-            F.count(F.lit(1)), F.countDistinct("content_hash")
-        ).first()
-        if n_in == 0:
-            if audit is not None:
-                audit.append((batch_id, 0, 0, 0, 0))
-            return
+        art = ingest_artifacts(batch_df.repartition(npart))
+        # n_in and the within-batch exact-dedup survivor count ride the
+        # keeper's checkpoint job as observed metrics (keeper keeps the
+        # first id per content hash, so n_exact == countDistinct(hash))
+        counts = Observation()
         keeper = (
             art.withColumn(
                 "__rn",
@@ -359,13 +351,17 @@ def streaming_dedup_ingest_sink_indexed(
                     Window.partitionBy("content_hash").orderBy("doc_id")
                 ),
             )
+            .observe(
+                counts,
+                F.count(F.lit(1)).alias("n_in"),
+                F.sum((F.col("__rn") == 1).cast("long")).alias("n_exact"),
+            )
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
         index_df = index_provider()
-        if index_df is None or not index_df.columns:
-            novel = keeper
-        else:
+        probed = index_df is not None and bool(index_df.columns)
+        if probed:
             # exact-hash probe FIRST: the LSH probe cannot see documents
             # too short to shingle (< k words — all-NULL signatures), so
             # without this anti-join a short doc would be re-accepted
@@ -381,21 +377,34 @@ def streaming_dedup_ingest_sink_indexed(
             # must not reach the LSH probe, whose verdicts assume
             # batch/index ids are disjoint
             keeper = keeper.join(index_df.select("doc_id"), "doc_id", "left_anti")
-            verdicts = incremental_neardup_verdicts_indexed(
-                index_df, keeper, min_jaccard=min_jaccard
-            ).select("doc_id", "is_novel")
-            novel = keeper.join(verdicts, "doc_id").filter(
-                F.col("is_novel")
-            ).drop("is_novel")
+        # The probe-ready batch is materialized ONCE: the checkpoint
+        # reads the stream source once and runs the artifacts, the
+        # exact-dedup window and both index anti-joins a single time.
+        # Left lazy, the LSH pairs, the verify's batch end and the
+        # written rows would each re-plan and re-run that whole chain
+        # (their projections differ, so AQE reuses none of the
+        # exchanges).
+        keeper = keeper.localCheckpoint()
+        observed = counts.get
+        n_in, n_exact = int(observed["n_in"]), int(observed["n_exact"] or 0)
+        if n_in == 0:
+            if audit is not None:
+                audit.append((batch_id, 0, 0, 0, 0))
+            return
+        novel = keeper
+        if probed:
+            # a batch document is a near-dup when ANY verified index
+            # candidate reaches min_jaccard: one broadcast anti-join of
+            # the (few) matching batch ids
+            dup_ids = (
+                _verified_probe_pairs(index_df, keeper)
+                .filter(F.col("jaccard") >= min_jaccard)
+                .select(F.col("id_a").alias("doc_id"))
+            )
+            novel = keeper.join(F.broadcast(dup_ids), "doc_id", "left_anti")
         # The accepted count rides the WRITE job as an observed metric:
-        # the verdict plan executes exactly once (the writer's append is
-        # its only consumer — the sink contract), where the previous
-        # shape paid a localCheckpoint materialization plus a count job
-        # per batch before the write even started (profiled as two
-        # scheduling floors per micro-batch at bench scale,
-        # scripts/streaming_compact_profile.py).
-        from pyspark.sql import Observation
-
+        # the writer's append is the novel frame's only consumer (the
+        # sink contract), so no count job runs before or after it.
         obs = Observation()
         novel = novel.observe(obs, F.count(F.lit(1)).alias("n_novel"))
         novel_writer(novel, batch_id)

@@ -19,6 +19,7 @@ SESSION_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.codegen.cache.maxEntries": "1000",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -46,6 +46,11 @@ def test_session_scale_posture(spark):
     assert conf.get("spark.sql.session.timeZone") == "UTC"
     assert conf.get("spark.sql.parquet.filterPushdown") == "true"
     assert conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    # no per-call call-site capture round trips on pyspark.sql.functions
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
 
 
 def test_driver_window_is_first_50_registry_entries():

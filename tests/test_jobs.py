@@ -931,7 +931,15 @@ def test_corpus_release_etl_end_to_end(spark, sf_dir, tmp_path):
     assert env2["diff"]["delete"] == 10
     assert env2["diff"]["insert"] == 3
     assert env2["diff"]["update"] == 5
-    assert env2["datacard_rows"] >= 3
+    # one row per lang, one per source, one grand total — and exactly
+    # the rows the release wrote
+    n_card = cat.read_table(f"corpus_datacard.v_{env2['version']}").count()
+    n_groups = (
+        v2.select("lang").distinct().count()
+        + v2.select("source").distinct().count()
+        + 1
+    )
+    assert env2["datacard_rows"] == n_card == n_groups
 
     vt = VersionedTable(spark, cat.root, "corpus")
     assert vt.read().count() == 93  # 100 − 10 deleted + 3 inserted

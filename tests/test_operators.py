@@ -605,6 +605,58 @@ def test_scoped_caches_releases_only_block_created_storage(spark, pinned_rdds):
         outer.unpersist()
 
 
+def test_scoped_caches_raises_no_java_exception(spark, pinned_rdds, monkeypatch):
+    """A scoped block that creates and releases a cache raises no Java
+    exception on the way: iterating a py4j ``JavaList`` ends on a Java
+    ``NoSuchElementException``, which PySpark converts with a dozen
+    class-lookup round trips per block."""
+    import pyspark.errors.exceptions.captured as captured
+
+    from spark_etl_agent_spark.core.cache import scoped_caches
+
+    calls = []
+    convert = captured._convert_exception
+
+    def counting(e):
+        calls.append(e)
+        return convert(e)
+
+    monkeypatch.setattr(captured, "_convert_exception", counting)
+    with scoped_caches(spark):
+        spark.range(20).cache().count()
+    assert calls == []
+
+
+def test_catalog_table_exists_resolves_path_class_in_one_lookup(
+    spark, tmp_path, monkeypatch
+):
+    """``Catalog.table_exists`` resolves ``org.apache.hadoop.fs.Path`` by
+    its qualified name: one unknown-member lookup, where a
+    segment-by-segment walk sends one per package segment (each a
+    failing ``Class.forName`` over the whole class path)."""
+    from py4j.clientserver import JavaClient
+    from py4j.protocol import (
+        REFL_GET_UNKNOWN_SUB_COMMAND_NAME,
+        REFLECTION_COMMAND_NAME,
+    )
+
+    from spark_etl_agent_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path))
+    lookup = REFLECTION_COMMAND_NAME + REFL_GET_UNKNOWN_SUB_COMMAND_NAME
+    sent = []
+    send = JavaClient.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(JavaClient, "send_command", counting)
+    assert not cat.table_exists("raw.nope")
+    monkeypatch.undo()
+    assert sum(c.startswith(lookup) for c in sent) == 1
+
+
 def test_release_storage_releases_given_rdds_and_entries(spark, pinned_rdds):
     """release_storage drops exactly the persisted RDDs and CacheManager
     entries it is given, the way bench.py releases what predates the

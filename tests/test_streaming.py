@@ -400,9 +400,12 @@ def test_watermark_advances_and_evicts_state_across_micro_batches(
     assert final_state <= 1
 
 
-def _run_ingest_stream(spark, src, sink, audit):
+def _run_ingest_stream(spark, src, sink, audit, wrap=None, plans=None):
     """Drive the ingest sink over the staged micro-batches in ``src``,
-    appending accepted documents (with their artifacts) to ``sink``."""
+    appending accepted documents (with their artifacts) to ``sink``.
+    ``wrap`` (optional) wraps the foreachBatch function; ``plans``
+    (optional list) collects the physical plan of each frame handed to
+    the writer."""
     from spark_etl_agent_spark.streaming.pipeline import (
         run_available_now,
         streaming_dedup_ingest_sink_indexed,
@@ -414,6 +417,8 @@ def _run_ingest_stream(spark, src, sink, audit):
         return spark.read.parquet(str(sink))
 
     def novel_writer(df, batch_id):
+        if plans is not None:
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
         df.coalesce(1).write.mode("append").parquet(str(sink))
 
     schema = spark.read.parquet(str(src)).schema
@@ -422,12 +427,13 @@ def _run_ingest_stream(spark, src, sink, audit):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
+    foreach_batch = streaming_dedup_ingest_sink_indexed(
+        index_provider, novel_writer, audit=audit, min_jaccard=0.6
+    )
     run_available_now(
         stream,
         output_mode="append",
-        foreach_batch=streaming_dedup_ingest_sink_indexed(
-            index_provider, novel_writer, audit=audit, min_jaccard=0.6
-        ),
+        foreach_batch=foreach_batch if wrap is None else wrap(foreach_batch),
     )
 
 
@@ -437,7 +443,10 @@ def test_streaming_dedup_ingest_accepts_only_novel(spark, tmp_path):
     accepted-corpus index; only novel docs land in the sink. Three
     rate-limited micro-batches exercise: empty index bootstrap,
     cross-batch exact dup, cross-batch near-dup, within-batch exact
-    dup."""
+    dup. The probe-ready batch is materialized once and novelty is an
+    anti-join, so a probed batch (non-empty index) runs at most 18
+    Spark jobs, the write included, and the frame handed to the writer
+    holds no Window."""
     base = "the quick brown fox jumps over the lazy dog again and again today"
     other = "completely different subject matter covering spark shuffles and joins"
     third = "yet another unrelated document about parquet footers and statistics"
@@ -455,8 +464,20 @@ def test_streaming_dedup_ingest_accepts_only_novel(spark, tmp_path):
         spark, tmp_path / "src", batches, "doc_id long, text string"
     )
     sink = tmp_path / "accepted"
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs: list = []
+
+    def wrap(fn):
+        def counted(batch_df, batch_id):
+            first = scheduler.nextJobId()
+            fn(batch_df, batch_id)
+            jobs.append(scheduler.nextJobId() - first)
+
+        return counted
+
     audit: list = []
-    _run_ingest_stream(spark, src, sink, audit)
+    plans: list = []
+    _run_ingest_stream(spark, src, sink, audit, wrap=wrap, plans=plans)
 
     accepted = spark.read.parquet(str(sink)).collect()
     assert sorted((r["doc_id"], r["text"]) for r in accepted) == [
@@ -467,6 +488,41 @@ def test_streaming_dedup_ingest_accepts_only_novel(spark, tmp_path):
     assert sorted(audit) == [
         (0, 2, 0, 0, 2), (1, 3, 0, 2, 1), (2, 3, 1, 1, 1),
     ]
+    # Spark jobs per sink call; the probed batches ran 26 each when the
+    # batch chain was re-planned for every consumer
+    assert len(jobs) == 3 and max(jobs[1:]) <= 18, jobs
+    assert len(plans) == 3
+    assert not any("Window" in p for p in plans), plans
+
+
+def test_ingest_sink_repeated_id_in_batch_keeps_audit_balanced(spark, tmp_path):
+    """Two rows with one id and different texts in one micro-batch, probed
+    against a non-empty index: each row is written at most once, and the
+    audit stays non-negative and balanced. (A row-to-row join of the
+    batch to its per-id verdicts wrote 4 rows and audited
+    ``(1, 2, 0, -2, 4)``.) Whether the second row of a repeated id should
+    be dropped as well is left open; both are written today."""
+    batches = [
+        [(1, "the quick brown fox jumps over the lazy dog again and again")],
+        [(2, "completely different subject matter covering spark shuffles"),
+         (2, "yet another unrelated document about parquet footers today")],
+    ]
+    src = stage_micro_batches(
+        spark, tmp_path / "src", batches, "doc_id long, text string"
+    )
+    sink = tmp_path / "accepted"
+    audit: list = []
+    _run_ingest_stream(spark, src, sink, audit)
+
+    accepted = sorted(
+        r["doc_id"] for r in spark.read.parquet(str(sink)).collect()
+    )
+    by_batch = dict((a[0], a[1:]) for a in audit)
+    n_in, n_exact_dups, n_dropped, n_novel = by_batch[1]
+    assert accepted.count(2) == n_novel
+    assert min(n_in, n_exact_dups, n_dropped, n_novel) >= 0
+    assert n_in == n_exact_dups + n_dropped + n_novel
+    assert by_batch == {0: (1, 0, 0, 1), 1: (2, 0, 0, 2)}
 
 
 def test_indexed_ingest_sink_matches_unindexed(spark, tmp_path):
